@@ -184,14 +184,6 @@ object Multimodal {
       : DataFrame =
     pairsFromSigs(sigMeta(blobs), maxDist)
 
-  /** Block-subset banded candidate pairs over a `(idCol, kind, sig)`
-    * frame: `blockCount` blocks of 60/blockCount bits, one bucket table
-    * per `keepBlocks`-subset of blocks, singleton buckets pruned before
-    * the self-join. Package-private HOOK — the Scratch ablation arms
-    * call this with both the production and the historical
-    * parameterization, so profiling code cannot drift from the
-    * production banding arithmetic. @return (kind, id_a, id_b), id_a <
-    * id_b, deduplicated across tables, NOT yet Hamming-verified. */
   /** The exploded (idCol, kind, block, bkey) bucket-table rows of
     * [[bandedCandidates]] — split out so the Scratch skew/ablation arms
     * measure the EXACT production bucket arithmetic. */
@@ -219,6 +211,14 @@ object Multimodal {
         col("__t.block").as("block"), col("__t.bkey").as("bkey"))
   }
 
+  /** Block-subset banded candidate pairs over a `(idCol, kind, sig)`
+    * frame: `blockCount` blocks of 60/blockCount bits, one bucket table
+    * per `keepBlocks`-subset of blocks, singleton buckets pruned before
+    * the self-join. Package-private HOOK — the Scratch ablation arms
+    * call this with both the production and the historical
+    * parameterization, so profiling code cannot drift from the
+    * production banding arithmetic. @return (kind, id_a, id_b), id_a <
+    * id_b, deduplicated across tables, NOT yet Hamming-verified. */
   private[graft] def bandedCandidates(rows: DataFrame, idCol: String,
       blockCount: Int, keepBlocks: Int, totalBits: Int = 60): DataFrame = {
     val blocks = bandedBlocks(rows, idCol, blockCount, keepBlocks, totalBits)

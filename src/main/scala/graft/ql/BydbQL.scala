@@ -2,7 +2,7 @@ package graft.ql
 
 import java.time.Instant
 
-import graft.engine.Planners
+import graft.engine.{BindFilterLiterals, Planners}
 import graft.model._
 import graft.sources.TableDef
 import org.apache.spark.sql.DataFrame
@@ -13,6 +13,16 @@ import org.apache.spark.sql.DataFrame
  * (banyand/liaison/grpc/bydbql.go:75-129: parse → bind → transform →
  * typed query → plan). `parse` and `bind` are pure; `run` resolves the
  * resource against a registry of tables and executes the planner.
+ *
+ * Literals are bound once per statement shape, the role of the
+ * reference's prepared statements (pkg/bydbql binder/prepared): `run`
+ * installs [[graft.engine.BindFilterLiterals]] into the resource's
+ * session, which passes the numeric, date and timestamp constants of a
+ * plan's filters (time windows, `IN` lists, range bounds, bound `?`
+ * values) to generated code by reference. A repeated statement with a
+ * new window or value therefore reuses the compiled classes of the
+ * first; pushed scan filters and partition pruning still see the
+ * literal values, and plans render exactly as before.
  */
 object BydbQL {
 
@@ -189,7 +199,8 @@ object BydbQL {
   }
 
   /** Parse/bind/transform/execute one statement. `now` anchors relative
-    * times (pass a fixed instant for reproducible queries). */
+    * times (pass a fixed instant for reproducible queries). The first
+    * call on a session installs the literal binding described above. */
   def run(ql: String, resources: Map[String, Resource],
       params: Seq[Any] = Nil, now: Instant = Instant.now()): DataFrame = {
     val stmt = bind(parse(ql), params)
@@ -198,6 +209,7 @@ object BydbQL {
       case t: QlShowTopN => (t.from.name, t.from.groups)
     }
     val res = resolve(resources, name, groups)
+    BindFilterLiterals.install(res.df.sparkSession)
     val schema = QlSchema(res.df.schema, res.fields,
       flexible = res.propertyTagsCol.isDefined)
     Transformer.transform(stmt, schema, now) match {

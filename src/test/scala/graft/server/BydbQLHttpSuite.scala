@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.time.Instant
 
 import graft.SparkSpec
+import graft.engine.BindFilterLiterals
 import graft.ql.{BydbQL, Lexer, Parser, QlSelect, QlShowTopN}
 import graft.sources.{Catalog, TableDef}
 import org.apache.spark.sql.Row
@@ -357,6 +358,31 @@ class BydbQLHttpSuite extends SparkSpec {
           s"\n${divergences.size} concurrent divergence(s):\n" +
             divergences.toArray.take(5).mkString("\n"))
       }
+      assert(spark.experimental.extraStrategies.count(_ eq BindFilterLiterals) == 1)
+    } finally server.stop()
+  }
+
+  test("wire concurrency: concurrent first requests install the literal binding once") {
+    val fresh = spark.newSession()
+    val events = Catalog.load(fresh, sf0001, "events")
+    val resources = Map("events" -> BydbQL.Resource(events,
+      Catalog.defs("events"), fields = Set("value")))
+    val server = BydbQLHttp.start(resources, threads = 4)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val statuses = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val threads = (0 until 4).map { k =>
+        new Thread(() => {
+          start.await()
+          statuses.add(post(server.url, queryJson("SELECT event_type, SUM(value) FROM MEASURE " +
+            s"events IN testdata TIME > '-${10 + k}d' GROUP BY event_type, value"))._1)
+        })
+      }
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join(600000))
+      assert(statuses.toArray.toSeq == Seq.fill(4)(200), statuses)
+      assert(fresh.experimental.extraStrategies.count(_ eq BindFilterLiterals) == 1)
     } finally server.stop()
   }
 }
