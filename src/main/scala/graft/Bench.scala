@@ -1,6 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** Wall seconds to build a query's frame and execute it to its last
+    * row, or the error that stopped it: a query that throws is a failure,
+    * never a fast timing. The query's OWN output columns are evaluated
+    * (toRdd executes the plan as declared); a count() would let Catalyst
+    * prune every computed column, so map-only queries would time a bare
+    * scan while the DuckDB oracle fetchall()s fully materialized rows. */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case NonFatal(e) => Left(e) }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the machine's cores — the deployment target is local[32]
@@ -45,22 +62,28 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Every failure, by the name of the query or set-up step that threw:
+    // listed as `failed` on the bench line, and the run exits non-zero.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    def fail(name: String, e: Throwable): Unit = if (!failed.contains(name)) {
+      failed(name) = e
+      System.err.println(s"[bench] $name failed: $e")
+    }
+    def attempt(name: String)(f: => Unit): Unit =
+      try f catch { case NonFatal(e) => fail(name, e) }
     // Untimed warmup: JVM/codegen initialization and parquet footer reads
     // otherwise land entirely on whichever query runs first (~4s of fixed
     // cost that is not operator time). NEUTRAL shape — a trivial count per
     // source table, never one of the timed queries, so no timed entry gets
     // warm caches the others lack.
     Seq("events", "documents", "embeddings", "lineitem", "orders", "customer")
-      .foreach { t =>
-        try graft.sources.Catalog.load(spark, sfDir, t).count()
-        catch { case _: Throwable => () }
-      }
+      .foreach(t => attempt(s"warmup_$t")(graft.sources.Catalog.load(spark, sfDir, t).count()))
     // Executor-path class initialization over SYNTHETIC rows (no source
     // table, no timed-query shape): the FIRST constant-fold, window,
     // object-hash aggregate, and broadcast join in a JVM each pay ~0.5-1.5s
     // of one-time class loading that plain scans never trigger — without
     // this, whichever timed query hits each path first absorbs it.
-    try {
+    attempt("warmup") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       spark.range(4)
@@ -92,10 +115,10 @@ object Bench {
         graft.operators.Multimodal.decodedSignature(
           spark.createDataset(wb)).count()
       }
-    } catch { case _: Throwable => () }
+    }
     // Untimed setup: one-time materializations (the storage layout, the
     // streaming topN snapshot) whose READ paths q41/q44 then measure.
-    try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
+    attempt("prepare")(SparkEntry.prepare(spark, sfDir))
     // optional comma-separated query filter for isolating one query's
     // time without the rest of the surface (diagnostics only; the driver
     // never sets it)
@@ -145,34 +168,30 @@ object Bench {
       // timings moves that reclamation cost off the clock.
       try System.gc() catch { case _: Throwable => () }
     }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // Evaluate the query's OWN output columns (toRdd executes the plan
-      // as declared). A count() here would let Catalyst prune every
-      // computed column — map-only queries would time a bare scan while
-      // the DuckDB oracle fetchall()s fully materialized rows.
-      try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()) }
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val timed = selected.map { case (name, fn) =>
-      val cold = timeOnce(fn)
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      val t = timeQuery(spark, sfDir, fn).fold(e => { fail(name, e); Double.NaN }, identity)
       isolate()
-      val warm = if (warmPass) { val w = timeOnce(fn); isolate(); w } else cold
+      t
+    }
+    val timed = selected.toSeq.map { case (name, fn) =>
+      val cold = timeOnce(name, fn)
+      val warm = if (warmPass && !failed.contains(name)) timeOnce(name, fn) else cold
       (name, cold, warm)
     }
     // later cold passes: full-list re-traversals (codegen/JIT-warmed —
     // diagnostic only, never folded into the headline)
     val coldRuns = scala.collection.mutable.Map(
-      timed.map { case (n, c, _) => n -> List(c) }.toSeq: _*)
+      timed.map { case (n, c, _) => n -> List(c) }: _*)
     for (_ <- 2 to coldPasses) selected.foreach { case (name, fn) =>
-      val t = timeOnce(fn); isolate()
-      coldRuns(name) = coldRuns(name) :+ t
+      if (!failed.contains(name)) coldRuns(name) = coldRuns(name) :+ timeOnce(name, fn)
     }
+    // a query that failed in any run has no timing
+    failed.keys.foreach(coldRuns.remove)
+    val passed = timed.filterNot { case (n, _, _) => failed.contains(n) }
     // headline: pass-1 true-cold; min-across-passes published alongside
-    val results = timed.map { case (n, c, _) => n -> c }.toMap
+    val results = passed.map { case (n, c, _) => n -> c }.toMap
     val resultsMin = coldRuns.map { case (n, cs) => n -> cs.min }.toMap
-    val warmResults = timed.map { case (n, _, w) => n -> w }.toMap
+    val warmResults = passed.map { case (n, _, w) => n -> w }.toMap
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val totalMin = if (resultsMin.nonEmpty) resultsMin.values.sum else 0.0
     val totalWarm = if (warmResults.nonEmpty) warmResults.values.sum else 0.0
@@ -181,6 +200,7 @@ object Bench {
     // times in the JSON, a round-over-round bench delta decomposes
     // mechanically into box-speed drift (anchors moved) × code change
     // (anchors flat, queries moved).
+    val failedJson = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
     val anchorNames = Seq("q01_scan_timerange", "q35_lineitem_pricing")
       .filter(coldRuns.contains)
     val anchorsJson = anchorNames.map { n =>
@@ -202,6 +222,7 @@ object Bench {
         f"${resultsMin.getOrElse(k, 0.0)}%.3f" }.mkString("[", ",", "]")
       val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs$om,""" +
+        s""""failed":$failedJson,""" +
         s""""value_min":${f"$totalMin%.3f"},"queries_min_vals":$qmins,""" +
         s""""anchors":$anchorsJson,""" +
         s""""cold_passes":$coldPasses,"sf":"$sfDir"}"""
@@ -218,7 +239,7 @@ object Bench {
       "\"" + k + "\":[" + cs.mkString(",") + "]" }.mkString("{", ",", "}")
     val fullJson = s"""{"total":$total,"total_min":$totalMin,"total_warm":$totalWarm,""" +
       s""""queries":$full,"queries_min":$fullMin,"queries_warm":$fullWarm,""" +
-      s""""queries_cold_runs":$fullRuns,""" +
+      s""""queries_cold_runs":$fullRuns,"failed":$failedJson,""" +
       s""""anchors":$anchorsJson,"cold_passes":$coldPasses,"sf":"$sfDir"}"""
     println(s"BENCH_FULL $fullJson")
     try {
@@ -239,5 +260,6 @@ object Bench {
       keep -= 1
     println(line(sorted.take(keep), sorted.length - keep))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

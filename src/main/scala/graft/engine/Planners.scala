@@ -468,6 +468,54 @@ object Planners {
     property(flat.drop(tagsCol), q, idCol, revCol, deletedCol)
   }
 
+  /** Largest Catalyst size estimate, in bytes, of a frame that
+    * [[oneTaskIfSmall]] reads as one task: the measured crossover.
+    * `graft.ql.OneTaskProbe` (local[4], one caller) timed the eight
+    * dashboard statement kinds over compacted four-shard events layouts
+    * with estimates from 0.13 to 4 MB, in four runs. Up to 1.1 MB the
+    * kinds together (the sum of their medians) were faster as one task
+    * in every run, by 2-35%, and used 26-35% less process CPU; above it
+    * one run was 2% slower at 1.6 MB and two were 5-6% slower at 4 MB.
+    * Per kind, `show_top` and `property` gained most (1.2-2x), while
+    * `order_limit`, whose multi-partition plan has no exchange to save,
+    * `trace` and `mean` were often slower alone (0.6-0.9x); with the
+    * dashboard's two concurrent callers `trace` and `mean` gained too and
+    * `order_limit` held level. */
+  val OneTaskMaxBytes: Long = 1L << 20
+
+  /** Catalyst's size estimate of `df`, in bytes, read from its analyzed
+    * plan: file sizes from the listing the session already holds, scaled
+    * by projections. It costs no I/O and no optimizer run, which a frame
+    * built per request (a group or stage union) would otherwise pay
+    * twice. */
+  private[graft] def sizeEstimate(df: DataFrame): BigInt =
+    df.queryExecution.analyzed.stats.sizeInBytes
+
+  /** The frame a BydbQL statement reads, planned as one task when it is
+    * small. When Catalyst's size estimate of `df` ([[sizeEstimate]]) is
+    * at most `maxBytes`, the read becomes `coalesce(1)`. Filters and column
+    * pruning still push through the coalesce into the scan, and its
+    * single partition satisfies every distribution an aggregate, window
+    * or sort requires, so the statement plans no exchange and runs as one
+    * job of one task: the way BanyanDB answers a query on hot data inside
+    * the node that holds it. A larger frame is returned unchanged, and so
+    * is the frame of a statement whose `criteria` run a full-text MATCH:
+    * that tokenizes every row's text, and the same probe measured one
+    * task 5-37% slower at a 0.26 MB documents estimate and about 2x
+    * slower at 1 MB. The estimate is of bytes on disk (or Catalyst's
+    * projection of them), not of rows decoded, so the cutoff holds for
+    * the per-row work the probe measured and not beyond it. */
+  def oneTaskIfSmall(df: DataFrame, criteria: Option[Criteria] = None,
+      maxBytes: Long = OneTaskMaxBytes): DataFrame =
+    if (!criteria.exists(fullText) && sizeEstimate(df) <= maxBytes) df.coalesce(1) else df
+
+  private def fullText(c: Criteria): Boolean = c match {
+    case Cond(_, _: Op.Match, _) => true
+    case And(l, r) => fullText(l) || fullText(r)
+    case Or(l, r) => fullText(l) || fullText(r)
+    case _ => false
+  }
+
   /** Multi-group union with schema merge (measure_analyzer.go:96-108;
     * cross_group_merge.go): missing columns null-filled. A tag that exists
     * in several groups with CONFLICTING types widens to

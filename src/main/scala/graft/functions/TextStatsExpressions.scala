@@ -393,6 +393,14 @@ case class SpanHashesExpr(child: Expression, spanTokens: Int)
     copy(child = newChild)
 }
 
+/** Column wrappers of the text kernels. Their inputs are typed strictly
+  * (`ExpectsInputTypes`): a text kernel takes a string column and
+  * [[spanHashes]] an array of strings, and any other type fails analysis
+  * with a type error. Unlike the `split`/`lower`/`size` chains these
+  * kernels replaced, nothing is cast to string implicitly, on purpose: a
+  * numeric or binary column fed to a tokenizer is a caller's mistake,
+  * and casting it would tokenize its rendering. Cast explicitly where
+  * that is wanted. */
 object TextStatsFunctions {
   def wsTokenCount(text: Column): Column =
     Bridge.column(WsTokenCountExpr(Bridge.expression(text)))

@@ -63,7 +63,7 @@ object Dedup {
     * bound, so the table is ~10 MB at the gate), and falls back to a
     * plain equi-join (AQE picks the strategy from runtime sizes) beyond
     * it. */
-  private def broadcastIfBounded(dim: DataFrame, measuredPostings: DataFrame)
+  private[graft] def broadcastIfBounded(dim: DataFrame, measuredPostings: DataFrame)
       : DataFrame = {
     val maxBytes = dim.sparkSession.conf
       .get("spark.graft.dedup.broadcastGateBytes", (1L << 30).toString).toLong

@@ -444,9 +444,16 @@ object TextAnalysis {
    * DELETES a window (unlike the dedup candidate keys, where a collision
    * only adds a verifiable candidate), and at 10¹² windows a 60/64-bit
    * key expects thousands of collisions while 128-bit expects ~10⁻¹³.
-   * Cost: the corpus is tokenized twice (two scans) — map work that runs
-   * at scan speed — in exchange for never shuffling corpus bytes; the
-   * join's small side is per-doc-bounded and AQE picks its strategy.
+   * Cost: the join's small side is per-doc-bounded and AQE picks its
+   * strategy. The corpus is scanned and tokenized once, and the window
+   * pass and the reassembly join share that scan through a
+   * [[Dedup.barrier]], so never shuffling corpus bytes is paid for in
+   * storage: the barrier materializes the whole corpus's token arrays, at
+   * least the size of the text (token bytes plus per-token offsets).
+   * `spark.graft.dedup.barrier` governs where that copy lives while the
+   * operator runs: block-manager memory and local disk under the default
+   * `localCheckpoint`, cached blocks that keep their lineage under
+   * `persist`, checkpoint files under `checkpoint`.
    *
    * @return (id, n_kept, text_dedup)
    */

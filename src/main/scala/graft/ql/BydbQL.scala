@@ -23,6 +23,19 @@ import org.apache.spark.sql.DataFrame
  * new window or value therefore reuses the compiled classes of the
  * first; pushed scan filters and partition pruning still see the
  * literal values, and plans render exactly as before.
+ *
+ * A statement over a small resource runs as one task, as BanyanDB
+ * answers a query on hot data inside the data node that holds it, with
+ * no distributed shuffle: when Catalyst's size estimate of the frame the
+ * planner reads (after group union and stage routing) is at most
+ * [[graft.engine.Planners.OneTaskMaxBytes]] (1 MB, the crossover measured
+ * by `graft.ql.OneTaskProbe`), `run` plans over its `coalesce(1)`
+ * ([[graft.engine.Planners.oneTaskIfSmall]]). The statement then plans
+ * no exchange, adaptive execution has no stage to re-plan, and it runs as
+ * one job of one stage and one task; pushed filters and literal binding
+ * are unchanged. A larger resource, and a statement with a full-text
+ * MATCH (it tokenizes every row, and was measured slower as one task
+ * from about 0.25 MB), plan exactly as without the rule.
  */
 object BydbQL {
 
@@ -200,9 +213,12 @@ object BydbQL {
 
   /** Parse/bind/transform/execute one statement. `now` anchors relative
     * times (pass a fixed instant for reproducible queries). The first
-    * call on a session installs the literal binding described above. */
+    * call on a session installs the literal binding described above, and
+    * a resource whose size estimate is at most `oneTaskMaxBytes` is read
+    * as one task (0 keeps every statement multi-partition). */
   def run(ql: String, resources: Map[String, Resource],
-      params: Seq[Any] = Nil, now: Instant = Instant.now()): DataFrame = {
+      params: Seq[Any] = Nil, now: Instant = Instant.now(),
+      oneTaskMaxBytes: Long = Planners.OneTaskMaxBytes): DataFrame = {
     val stmt = bind(parse(ql), params)
     val (name, groups) = stmt match {
       case s: QlSelect => (s.from.name, s.from.groups)
@@ -212,18 +228,21 @@ object BydbQL {
     BindFilterLiterals.install(res.df.sparkSession)
     val schema = QlSchema(res.df.schema, res.fields,
       flexible = res.propertyTagsCol.isDefined)
+    // the frame the planner reads: the selected stages, as one task when small
+    def read(stages: Seq[String], criteria: Option[Criteria]) =
+      Planners.oneTaskIfSmall(stagedDf(res, stages, name), criteria, oneTaskMaxBytes)
     Transformer.transform(stmt, schema, now) match {
       case MeasureStatement(q) =>
-        Planners.measure(stagedDf(res, q.stages, name), res.tdef,
+        Planners.measure(read(q.stages, q.criteria), res.tdef,
           q.copy(indexMode = q.indexMode || res.indexMode))
       case StreamStatement(q) =>
         val eid = res.elementIdCol.getOrElse(
           throw new IllegalArgumentException(s"resource $name has no elementIdCol"))
-        Planners.stream(stagedDf(res, q.stages, name), res.tdef, q, eid)
+        Planners.stream(read(q.stages, q.criteria), res.tdef, q, eid)
       case TraceStatement(q) =>
         val tid = res.traceIdCol.getOrElse(
           throw new IllegalArgumentException(s"resource $name has no traceIdCol"))
-        Planners.traceSpanGroups(stagedDf(res, q.stages, name), res.tdef, q,
+        Planners.traceSpanGroups(read(q.stages, q.criteria), res.tdef, q,
           tid, res.spanStruct)
       case PropertyStatement(q) =>
         val (idc, revc) = (res.propertyIdCol, res.propertyRevCol) match {
@@ -233,18 +252,18 @@ object BydbQL {
         }
         res.propertyTagsCol match {
           case Some(tc) =>
-            Planners.propertyFlexible(res.df, q, idc, revc,
+            Planners.propertyFlexible(read(Nil, q.criteria), q, idc, revc,
               res.propertyDeletedCol, tc)
           case None =>
-            Planners.property(res.df, q, idc, revc, res.propertyDeletedCol)
+            Planners.property(read(Nil, q.criteria), q, idc, revc, res.propertyDeletedCol)
         }
       case TopNStatement(q) =>
         res.topNRule match {
           // no registered `_top_n_result` → rewrite to the raw measure
-          case Some(r) => Planners.topNFromRaw(stagedDf(res, q.stages, name),
+          case Some(r) => Planners.topNFromRaw(read(q.stages, None),
             r.tsNanosCol, r.entityCol, r.valueExpr, r.intervalMs,
             r.countersNumber, q, r.groupCols)
-          case None => Planners.topNRead(stagedDf(res, q.stages, name), q)
+          case None => Planners.topNRead(read(q.stages, None), q)
         }
     }
   }

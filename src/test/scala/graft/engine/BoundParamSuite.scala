@@ -9,7 +9,7 @@ import graft.storage.{Layout, LayoutSpec}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -68,8 +68,8 @@ class BoundParamSuite extends SparkSpec with AdaptiveSparkPlanHelper {
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   /** Rows of `ql` with bound parameters, checking they were bound. */
-  private def boundRows(ql: String): Seq[String] = {
-    val df = BydbQL.run(ql, bound, Nil, now)
+  private def boundRows(ql: String, maxBytes: Long = Planners.OneTaskMaxBytes): Seq[String] = {
+    val df = BydbQL.run(ql, bound, Nil, now, maxBytes)
     val out = rows(df)
     assert(boundParams(df) > 0, s"no bound parameter in the plan of $ql")
     out
@@ -95,6 +95,22 @@ class BoundParamSuite extends SparkSpec with AdaptiveSparkPlanHelper {
       plainRows(ql(10))
       val plainShifted = (11 to 12).map(k => compilesDuring(plainRows(ql(k))))
       assert(plainShifted.forall(_ > 0), s"$name: plain shifted requests compiled $plainShifted")
+    }
+  }
+
+  test("one-task and multi-partition shapes: filters bound, 0 classes compiled on shifted requests") {
+    for ((label, maxBytes) <- Seq("one-task" -> Long.MaxValue, "multi-partition" -> 0L);
+        (name, ql) <- shapes) {
+      val first = BydbQL.run(ql(4), bound, Nil, now, maxBytes)
+      first.collect()
+      val coalesced = collect(first.queryExecution.executedPlan) { case c: CoalesceExec => c }
+      assert(coalesced.size == (if (maxBytes > 0) 1 else 0), s"$label $name: wrong shape")
+      coalesced.foreach { c =>
+        val params = filters(c).map(_.condition.collect { case b: BoundParam => b }.size).sum
+        assert(params > 0, s"$name: no bound parameter under CoalesceExec")
+      }
+      val shifted = (5 to 7).map(k => compilesDuring(boundRows(ql(k), maxBytes)))
+      assert(shifted.forall(_ == 0), s"$label $name: shifted requests compiled $shifted classes")
     }
   }
 

@@ -140,6 +140,35 @@ class PlanShapeSuite extends SparkSpec {
     } finally spark.conf.unset("spark.graft.dedup.barrier")
   }
 
+  test("dedup broadcast gate fails closed when the postings cannot be measured") {
+    // barrier mode `persist` keeps the original plan, so no materialized
+    // leaf reports bytes: the per-document table must not be hinted, or
+    // a corpus-sized side is broadcast exactly where its size is unknown
+    import graft.operators.Dedup
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, ResolvedHint}
+    def gated(barrier: String) = {
+      spark.conf.set("spark.graft.dedup.barrier", barrier)
+      try {
+        val postings = Dedup.barrier(spark.range(1000).toDF("id"))
+        postings.count()
+        val dim = spark.range(100).toDF("id")
+        val joined = postings.join(Dedup.broadcastIfBounded(dim, postings), "id")
+        val out = (org.apache.spark.sql.graftbridge.Bridge.materializedBytes(postings),
+          joined.queryExecution.analyzed.collect { case h: ResolvedHint => h },
+          joined.queryExecution.optimizedPlan.collect { case j: Join => j.hint })
+        postings.unpersist()
+        out
+      } finally spark.conf.unset("spark.graft.dedup.barrier")
+    }
+    val (bytes, hints, joinHints) = gated("persist")
+    assert(bytes.isEmpty, s"persist barrier measured $bytes bytes")
+    assert(hints.isEmpty, s"broadcast hint under an unmeasurable gate: $hints")
+    assert(joinHints == Seq(JoinHint.NONE), joinHints.toString)
+    // the control: a measured barrier keeps the hint
+    val (measured, kept, _) = gated("localCheckpoint")
+    assert(measured.exists(_ > 0) && kept.nonEmpty, s"$measured, $kept")
+  }
+
   test("q53 curation: AQE converts the dedup-survivor join to a broadcast") {
     val df = SparkEntry.queries("q53_corpus_curation")(spark, sf0001)
     df.collect() // AQE finalizes the plan at execution
