@@ -26,8 +26,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       // Spark-docs-recommended production setting: coalesce post-shuffle
       // partitions to the target size instead of maximizing parallelism —
       // fewer, fuller reduce tasks per stage.
@@ -43,8 +42,7 @@ object Bench {
       // target SF). The 128m default is right for a 100 TB cluster but
       // serializes a toy-scale scan into one task when a table is a single
       // ~100 MB file.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
+      .config("spark.sql.files.maxPartitionBytes", "8m")
       // Post-shuffle advisory size gets the same local-scale treatment as
       // the scan split above: the 64m default folds every toy-scale
       // aggregation onto ONE reduce task (measured: q81's two ~16 MB
@@ -52,8 +50,7 @@ object Bench {
       // 4-way and halves the query). A 100 TB deployment keeps the
       // default — this knob, like maxPartitionBytes, is sized to the SF
       // the local bench actually runs.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "4m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
       // NOTE: spark.sql.objectHashAggregate.sortBased.fallbackThreshold
       // stays at its default (128): raising it to 1M was measured 23%
       // SLOWER on this surface at sf1 — with nearly-unique keys partial

@@ -49,6 +49,11 @@ object Dedup {
     }
   }
 
+  /** Measured-postings ceiling of [[broadcastIfBounded]]: 1 GiB of
+    * postings, which bound a ~10 MB size table (postings carry ~100× more
+    * bytes than the table). */
+  private[graft] val BroadcastGateBytes: Long = 1L << 30
+
   /** Broadcast a per-document dimension frame (e.g. the (id, set_size)
     * table of an inverted-index join) ONLY while the corpus is provably
     * small enough, measured — like [[scaledPartitions]] — from the
@@ -58,15 +63,11 @@ object Dedup {
     * here is a scale-killer that no ≤sf25 sweep can surface (the r16
     * optimization-round review caught it; guide §3.1). The gate keeps the
     * broadcast (and the exact bench-scale plan shape) while the measured
-    * postings stay under `spark.graft.dedup.broadcastGateBytes` (default
-    * 1 GiB — postings carry ~100× more bytes than the size table they
-    * bound, so the table is ~10 MB at the gate), and falls back to a
-    * plain equi-join (AQE picks the strategy from runtime sizes) beyond
-    * it. */
-  private[graft] def broadcastIfBounded(dim: DataFrame, measuredPostings: DataFrame)
-      : DataFrame = {
-    val maxBytes = dim.sparkSession.conf
-      .get("spark.graft.dedup.broadcastGateBytes", (1L << 30).toString).toLong
+    * postings stay at or under `maxBytes` ([[BroadcastGateBytes]]), and
+    * falls back to a plain equi-join (AQE picks the strategy from runtime
+    * sizes) beyond it. */
+  private[graft] def broadcastIfBounded(dim: DataFrame, measuredPostings: DataFrame,
+      maxBytes: Long = BroadcastGateBytes): DataFrame = {
     org.apache.spark.sql.graftbridge.Bridge.materializedBytes(measuredPostings) match {
       case Some(b) if b <= maxBytes => broadcast(dim)
       // FAIL CLOSED when the size cannot be measured (barrier mode
@@ -141,9 +142,7 @@ object Dedup {
     * (transform HOF) and allocated a string array + joined string per
     * band per doc; accidental (unequal-slice) collisions differ between
     * the two functions at the shared 2⁻⁶⁴ rate and are removed by the
-    * exact verification both paths end with (r16 optimization round).
-    * Shared by [[minhashLshPairs]] and [[minhashLshFunnel]] so the funnel
-    * can never drift from the query's banding. */
+    * exact verification both paths end with (r16 optimization round). */
   private def bandHashArray(sig: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
       val lanes = (0 until rowsPerBand)
@@ -219,55 +218,6 @@ object Dedup {
       .withColumn("__j", exactJaccard(col("__sh_a"), col("__sh_b")))
       .filter(col("__j") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("__j"), 6).as("jaccard"))
-  }
-
-  /**
-   * Funnel breakdown of the [[minhashLshPairs]] pipeline — the r12-verdict
-   * diagnostic (candidates generated vs size-gate survivors vs verified):
-   * one row (docs, band_collisions, candidates, size_gated, emitted).
-   * Diagnostic-only (drives the BASELINE.md q24 floor analysis via
-   * tools/Scratch); the query path stays [[minhashLshPairs]].
-   */
-  def minhashLshFunnel(df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, bands: Int = 32, rowsPerBand: Int = 2,
-      threshold: Double = 0.5): Map[String, Long] = {
-    val k = bands * rowsPerBand
-    val mat = barrier(df
-      .select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.shingleHashes(col(textCol), w).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig",
-        graft.functions.SketchFunctions.minhashSigLongs(col("sh"), k)))
-    val sh = mat.select("id", "sh")
-    val sigs = mat.select(col("id"), size(col("sh")).as("sz"), col("sig"))
-    val buckets = sigs.select(col("id"), col("sz"),
-        posexplode(bandHashArray(col("sig"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val hot = buckets.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .select("band", "bucket")
-    val pruned = buckets.join(hot, Seq("band", "bucket"))
-    val collisions = barrier(pruned
-      .select(col("band"), col("bucket"), col("id").as("id_a"), col("sz").as("__sz_a"))
-      .join(pruned.select(col("band"), col("bucket"), col("id").as("id_b"),
-        col("sz").as("__sz_b")), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "__sz_a", "__sz_b"))
-    val gated = barrier(collisions
-      .filter(least(col("__sz_a"), col("__sz_b")).cast("double") >=
-        lit(threshold) * greatest(col("__sz_a"), col("__sz_b")))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b"))
-    val emitted = gated
-      .join(sh.select(col("id").as("id_a"), col("sh").as("__sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("__sh_b")), Seq("id_b"))
-      .filter(exactJaccard(col("__sh_a"), col("__sh_b")) >= threshold)
-    Map(
-      "docs" -> mat.count(),
-      "band_collisions" -> collisions.count(),
-      "distinct_candidates" -> collisions.select("id_a", "id_b")
-        .dropDuplicates("id_a", "id_b").count(),
-      "size_gated" -> gated.count(),
-      "emitted" -> emitted.count())
   }
 
   /** 60-bit SimHash over the token multiset: per bit position, strict
@@ -405,46 +355,13 @@ object Dedup {
    * before the cap exactly like [[ngramJaccardPairs]], so dropped hot
    * fingerprints only shrink the estimate, never invent a pair.
    *
-   * AN ALL-PAIRS/PPJOIN PREFIX-FILTERED ARM EXISTS, CONF-GATED (Bayardo
-   * et al. WWW'07 / Xiao et al. WWW'08 — lossless): a valid pair
-   * needs `I = |capA ∩ capB| ≥ θ_d = max(minShared, ⌈threshold·|d|⌉)` for
-   * BOTH docs (from `I/(sa+sb−I) ≥ t` and `sb ≥ I` follows `I ≥ t·sa`,
-   * and symmetrically), so with every doc's capped postings ordered by
-   * one GLOBAL total order — (df_, fp), rarest first — the smallest
-   * common fingerprint of any valid pair has ≥ θ_d − 1 common postings
-   * after it in EACH doc's list and therefore sits inside each doc's
-   * first `c_d − θ_d + L` postings for the generalized L-lemma (so a
-   * valid pair shares ≥ L = minShared PREFIX postings, not just one).
-   * Self-joining only those prefixes and cutting at ≥ L generates every
-   * valid pair while keeping the HOT fingerprints (df near the cap:
-   * shared boilerplate, exactly the Σ df² floor) out of the join —
-   * rarest-first ordering pushes them into suffixes. Candidates are
-   * then verified by counting their exact capped intersection, and docs
-   * whose capped list cannot reach θ_d drop before the join entirely.
-   * MEASURED OUTCOME (see winnowingPairsStaged): at this operator's
-   * t = 0.25 / minShared = 3 the prefix arm is net SLOWER at sf25
-   * despite a 4.3× candidate-row cut — the default stays the direct
-   * self-join at every scale, and conf
-   * `spark.graft.dedup.winnow.prefixFilter=on` selects the prefix arm
-   * (the differential suite runs both on one corpus; the funnel
-   * diagnostic always measures the prefix arm's pruning).
+   * All-Pairs/PPJoin prefix filtering was measured and rejected: at this
+   * operator's t = 0.25 it was net slower at sf25 (BASELINE.md, "q78
+   * prefix-filter investigation").
    */
   def winnowingPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, threshold: Double = 0.25, minShared: Int = 3,
-      maxDocFreq: Int = 128): DataFrame =
-    winnowingPairsStaged(df, idCol, textCol, k, w, threshold, minShared,
-      maxDocFreq).result
-
-  /** The staged plan behind [[winnowingPairs]], exposed so the funnel
-    * diagnostic counts each stage of the SAME frames the query runs. */
-  private[graft] final case class WinnowStages(
-      capped: DataFrame, prefixes: DataFrame, candidates: DataFrame,
-      result: DataFrame)
-
-  private[graft] def winnowingPairsStaged(df: DataFrame, idCol: String,
-      textCol: String, k: Int, w: Int, threshold: Double, minShared: Int,
-      maxDocFreq: Int, forcePrefix: Option[Boolean] = None): WinnowStages = {
-    import org.apache.spark.sql.expressions.Window
+      maxDocFreq: Int = 128): DataFrame = {
     val fps = barrier(
       TextAnalysis.winnowFingerprints(df, idCol, textCol, k, w)
         .select(col(idCol).as("id"), col("fingerprint").as("fp")))
@@ -458,149 +375,32 @@ object Dedup {
     val base = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
     def scaled(d: DataFrame, keys: Column*): DataFrame =
       if (n > base) d.repartition(n, keys: _*) else d
-    // MEASURED VERDICT (sf25 250×-replica, stock 32c/32p/8g, same-box
-    // back-to-back 3-run A/B): the prefix arm cut candidate join rows
-    // 4.3× at sf5 (197M → 45.8M; 32.6M 1-token candidates → 1.35M at
-    // ≥L) yet is NET SLOWER at sf25 — warm 339 s vs 268 s — because
-    // the rarest-first window sort, the 3× lazy posting re-joins, and
-    // the candidate-verification explode (candidates × ~60 postings,
-    // growing with duplication²) cost more than the pruned Σ df²
-    // aggregate saves: one shuffle + count of 16-byte pair rows is
-    // already the shape a shuffle engine executes best at this
-    // threshold (t = 0.25 prefixes keep ~60 % of postings; classic
-    // All-Pairs wins live at t ≥ 0.8 where prefixes are tiny). So
-    // `auto` resolves to the direct join at EVERY scale; the prefix arm
-    // stays conf-selectable, differentially tested, and funnel-measured
-    // for corpora/thresholds where the trade flips.
-    val usePrefix = forcePrefix.getOrElse(
-      df.sparkSession.conf.get("spark.graft.dedup.winnow.prefixFilter", "auto") match {
-        case "on" => true
-        case _ => false
-      })
-    // capped postings keep df_ (the prefix order's major key). LAZY, not
-    // barriered: each consumer re-executes only the cheap post-exchange
-    // join while ReuseExchange dedups the underlying fp shuffles — a
-    // localCheckpoint of the full posting list held deserialized blocks
-    // that OOM'd the 8 g heap at sf5 before any join work started.
+    // LAZY, not barriered: a localCheckpoint of the full posting list
+    // held deserialized blocks that OOM'd the 8 g heap at sf5 before any
+    // join work started
     val capped = fps.join(
       fps.groupBy("fp").agg(count(lit(1)).as("df_"))
         .filter(col("df_") <= maxDocFreq && col("df_") >= 2),
       Seq("fp"))
-
+    val filtered = scaled(capped.select("fp", "id"), col("fp"))
+    val joined = filtered.select(col("fp"), col("id").as("id_a"))
+      .join(filtered.select(col("fp"), col("id").as("id_b")), Seq("fp"))
+      .filter(col("id_a") < col("id_b"))
     // size-table joins go through the measured broadcast gate (per-doc
     // tables are corpus-sized — see broadcastIfBounded); the fps barrier
     // is the measured source
-    def tail(counted: DataFrame, szs: DataFrame): DataFrame = counted
+    scaled(joined, col("id_a"), col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      .join(broadcastIfBounded(szs.withColumnRenamed("id", "id_a")
+      .join(broadcastIfBounded(sizes.withColumnRenamed("id", "id_a")
         .withColumnRenamed("set_size", "size_a"), fps), Seq("id_a"))
-      .join(broadcastIfBounded(szs.withColumnRenamed("id", "id_b")
+      .join(broadcastIfBounded(sizes.withColumnRenamed("id", "id_b")
         .withColumnRenamed("set_size", "size_b"), fps), Seq("id_b"))
       .withColumn("__sim", col("n_shared").cast("double") /
         (col("size_a") + col("size_b") - col("n_shared")))
       .filter(col("__sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("n_shared"),
         round(col("__sim"), 6).as("winnow_sim"))
-
-    if (!usePrefix) {
-      // direct posting self-join — the cheapest plan while Σ df² is small
-      val filtered = scaled(capped.select("fp", "id"), col("fp"))
-      val joined = filtered.select(col("fp"), col("id").as("id_a"))
-        .join(filtered.select(col("fp"), col("id").as("id_b")), Seq("fp"))
-        .filter(col("id_a") < col("id_b"))
-      val result = tail(scaled(joined, col("id_a"), col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared")), sizes)
-      return WinnowStages(capped, capped.select("fp", "id"),
-        joined.select("id_a", "id_b"), result)
-    }
-
-    // θ uses the UNCAPPED size (the Jaccard denominator's size), the
-    // prefix position the CAPPED list (what the intersection is counted
-    // over); the 1e-9 slack keeps float noise in t·s from over-rounding
-    // ⌈·⌉ upward — one posting too MANY in a prefix is harmless, one too
-    // few loses pairs. GENERALIZED prefix (the L-extension of the
-    // All-Pairs lemma): with prefix length c − θ + L, the L smallest
-    // common fingerprints of any valid pair all sit inside BOTH prefixes
-    // (the j-th smallest has ≥ θ − j common postings after it in each
-    // list), so candidates need ≥ L shared PREFIX postings, not ≥ 1.
-    // L = minShared (≤ θ_d for every doc by construction): at the
-    // low-threshold/low-minShared settings this operator runs (t = 0.25,
-    // L = 3) the 1-token filter over-generates catastrophically —
-    // measured sf5: 32.6M distinct 1-token candidates for 11 224 true
-    // pairs, and verifying them exploded to ~2 G rows and OOM'd — while
-    // the ≥L pair-count cut turns candidate generation into the same
-    // aggregate shape as the unfiltered join but over the pruned prefix
-    // postings, where the hot capped-df fingerprints no longer meet.
-    val L = math.max(1, minShared).toLong
-    val byDoc = Window.partitionBy("id")
-    // Only the per-doc size table is barriered (one row per doc — tiny):
-    // it feeds THREE broadcast builds whose canonical forms differ (the
-    // renames), so without it each build re-runs the sizes aggregate.
-    // Everything else stays LAZY on purpose: the self-join's two sides
-    // and the verify sides are identical subplans whose exchanges
-    // ReuseExchange dedups, while barriering the posting-scale frames
-    // (capped/prefixes) was measured FATAL at sf25 — localCheckpoint
-    // holds raw row-object blocks, and stacking ~50M-row barriers on top
-    // of the fps barrier heap-OOM'd an 8 g run that the lazy shape
-    // completes.
-    val sizesM = barrier(sizes)
-    val prefixes = scaled(capped, col("id"))
-      .join(broadcastIfBounded(sizesM, fps), Seq("id"))
-      .withColumn("__theta", greatest(lit(minShared.toLong),
-        ceil(col("set_size") * threshold - lit(1e-9))))
-      .withColumn("__rn", row_number().over(byDoc.orderBy(col("df_"), col("fp"))))
-      .withColumn("__c", count(lit(1)).over(byDoc))
-      .filter(col("__rn") <= col("__c") - col("__theta") + L)
-      .select("fp", "id")
-    val pref = scaled(prefixes, col("fp"))
-    val candidates = scaled(
-      pref.select(col("fp"), col("id").as("id_a"))
-        .join(pref.select(col("fp"), col("id").as("id_b")), Seq("fp"))
-        .filter(col("id_a") < col("id_b")),
-      col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__pre"))
-      .filter(col("__pre") >= L)
-      .select("id_a", "id_b")
-    // verification: exact capped-intersection count, one explode of the
-    // candidate list by side a's postings + an equi-join on (id_b, fp).
-    // The explode MULTIPLIES rows ~|postings per doc|× past the
-    // input-bytes-derived n, so these exchanges run 4× finer (sorter
-    // state per task is what OOM'd here at sf25, not input size).
-    val nv = if (n > base) math.min(4096, n * 4) else n
-    def scaledV(d: DataFrame, keys: Column*): DataFrame =
-      if (nv > base) d.repartition(nv, keys: _*) else d
-    val verified = scaledV(candidates, col("id_a"))
-      .join(scaledV(capped.select(col("id").as("id_a"), col("fp")), col("id_a")),
-        Seq("id_a"))
-      .join(scaledV(capped.select(col("id").as("id_b"), col("fp")),
-        col("id_b"), col("fp")), Seq("id_b", "fp"))
-    val result = tail(scaledV(verified, col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared")), sizesM)
-    WinnowStages(capped, prefixes, candidates, result)
-  }
-
-  /** Funnel diagnostic for the prefix-filtered winnow join (mirrors
-    * [[minhashLshFunnel]]): co-posting rows the UNFILTERED self-join
-    * would generate (Σ df·(df−1)/2 over capped postings) vs prefix
-    * postings kept vs candidate pairs vs emitted pairs. Always measures
-    * the PREFIX arm — it exists to quantify that arm's pruning. */
-  def winnowingPairsFunnel(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, threshold: Double = 0.25, minShared: Int = 3,
-      maxDocFreq: Int = 128): Map[String, Long] = {
-    val st = winnowingPairsStaged(df, idCol, textCol, k, w, threshold,
-      minShared, maxDocFreq, forcePrefix = Some(true))
-    def copostings(postings: DataFrame): Long = {
-      val r = postings.groupBy("fp").agg(count(lit(1)).as("d"))
-        .agg(sum((col("d") * (col("d") - 1) / 2).cast("long"))).collect().head
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    Map(
-      "posting_rows" -> st.capped.count(),
-      "coposting_rows_unfiltered" -> copostings(st.capped),
-      "prefix_rows" -> st.prefixes.count(),
-      "coposting_rows_prefix" -> copostings(st.prefixes),
-      "candidate_pairs" -> st.candidates.count(),
-      "emitted_pairs" -> st.result.count())
   }
 
   /**
@@ -715,7 +515,7 @@ object Dedup {
    * plan-time collect the IVF centroid resolution performs — and run
    * union-find with path compression directly; larger graphs take the
    * distributed rounds. Both paths produce identical labels (tested).
-   * Measured crossover (SCRATCH_CC_LIVE, 5.8M-edge sf5 media graph):
+   * Measured crossover (5.8M-edge sf5 media graph, BASELINE.md):
    * driver ~5 s vs distributed 22-26 s — on a deployment whose driver
    * heap can afford the ~50 bytes/edge transient collect, raising the
    * conf well past 2^20 buys that gap; the distributed rounds exist for

@@ -184,10 +184,12 @@ object Multimodal {
       : DataFrame =
     pairsFromSigs(sigMeta(blobs), maxDist)
 
-  /** The exploded (idCol, kind, block, bkey) bucket-table rows of
-    * [[bandedCandidates]] — split out so the Scratch skew/ablation arms
-    * measure the EXACT production bucket arithmetic. */
-  private[graft] def bandedBlocks(rows: DataFrame, idCol: String,
+  /** Block-subset banded candidate pairs over a `(idCol, kind, sig)`
+    * frame: `blockCount` blocks of 60/blockCount bits, one bucket table
+    * per `keepBlocks`-subset of blocks, singleton buckets pruned before
+    * the self-join. @return (kind, id_a, id_b), id_a < id_b,
+    * deduplicated across tables, NOT yet Hamming-verified. */
+  private def bandedCandidates(rows: DataFrame, idCol: String,
       blockCount: Int, keepBlocks: Int, totalBits: Int = 60): DataFrame = {
     require(totalBits % blockCount == 0 && keepBlocks >= 1 &&
       keepBlocks <= blockCount,
@@ -205,23 +207,10 @@ object Multimodal {
         }
         struct(lit(ti).as("block"), key.as("bkey"))
       }
-    rows.select(col(idCol), col("kind"),
+    val blocks = rows.select(col(idCol), col("kind"),
         explode(array(tables.toIndexedSeq: _*)).as("__t"))
       .select(col(idCol), col("kind"),
         col("__t.block").as("block"), col("__t.bkey").as("bkey"))
-  }
-
-  /** Block-subset banded candidate pairs over a `(idCol, kind, sig)`
-    * frame: `blockCount` blocks of 60/blockCount bits, one bucket table
-    * per `keepBlocks`-subset of blocks, singleton buckets pruned before
-    * the self-join. Package-private HOOK — the Scratch ablation arms
-    * call this with both the production and the historical
-    * parameterization, so profiling code cannot drift from the
-    * production banding arithmetic. @return (kind, id_a, id_b), id_a <
-    * id_b, deduplicated across tables, NOT yet Hamming-verified. */
-  private[graft] def bandedCandidates(rows: DataFrame, idCol: String,
-      blockCount: Int, keepBlocks: Int, totalBits: Int = 60): DataFrame = {
-    val blocks = bandedBlocks(rows, idCol, blockCount, keepBlocks, totalBits)
     val hot = blocks.groupBy("kind", "block", "bkey")
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
       .select("kind", "block", "bkey")

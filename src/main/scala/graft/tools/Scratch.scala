@@ -2,14 +2,13 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE diagnostic/ablation entry point (not part of the library
-  * surface; never invoked by the driver): per-query stage-level timing
-  * (default mode, `sbt "runMain graft.tools.Scratch q15_version_dedup"`),
-  * plus env-gated ablation arms — SCRATCH_MEDIA (q115/q116 banding
-  * geometries through the production `bandedCandidates` hook),
-  * SCRATCH_IMG (q120 encode/decode/banding split), SCRATCH_ABLATE
-  * (groupBy-aggregate strategy comparisons). Measurements this produced
-  * live in BASELINE.md ("floor analysis", banding geometry tables). */
+/** Per-query stage-level timing, a diagnostic outside the library
+  * surface: `sbt "runMain graft.tools.Scratch
+  * q15_version_dedup"` runs each named query `SCRATCH_RUNS` times (default
+  * 5) with Bench's session settings and isolation between runs.
+  * `SCRATCH_STAGES=1` prints the last run's stages, `SCRATCH_EXPLAIN=1`
+  * the formatted plan; `SCRATCH_CORES` / `SCRATCH_SHUFFLE` size the
+  * session (default 32 / 32). */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -17,455 +16,18 @@ object Scratch {
       .master("local[" + sys.env.getOrElse("SCRATCH_CORES", "32") + "]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SCRATCH_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SCRATCH_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SCRATCH_ADVISORY", "4m")) // match Bench
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m") // match Bench
       .config("spark.sql.files.maxPartitionBytes", "8m")
-      // diagnostics collect whole pair graphs (SCRATCH_CC)
-      .config("spark.driver.maxResultSize", "8g")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // generic conf overrides for A/B arms, e.g.
-    // SCRATCH_CONF=spark.graft.dedup.winnow.prefixFilter=off
-    sys.env.get("SCRATCH_CONF").foreach(_.split(",").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
     // SCRATCH_NO_PREPARE skips the full artifact build — the sf25
     // documents-only spot-check runs queries whose inputs either read the
     // scale dir directly or materialize on demand inside the query fn
     if (!sys.env.contains("SCRATCH_NO_PREPARE"))
       graft.SparkEntry.prepare(spark, sfDir)
-    if (sys.env.contains("SCRATCH_MEDIA_SKEW")) {
-      // r17 item: is the q115/q116 banded candidate join SKEWED? Print
-      // the post-prune bucket-size distribution per bucket table (the
-      // self-join cost is Σ n² per (kind, block, bkey) bucket) so the
-      // salt/split decision rests on measured bucket mass, not a guess.
-      import org.apache.spark.sql.functions._
-      implicit val sp: SparkSession = spark
-      import graft.operators.{Dedup, Multimodal}
-      val docs = graft.sources.Catalog.load(spark, sfDir, "documents")
-      val blobs = Multimodal.blobsWithReencodes(docs, "doc_id", "text", 5)
-      val sigs = Dedup.barrier(
-        Multimodal.perceptualSignature(blobs).select("kind", "sig").distinct()
-          .withColumn("__rid", col("sig")))
-      val blocks = Multimodal.bandedBlocks(sigs, "__rid", 5, 2)
-      val sizes = blocks.groupBy("kind", "block", "bkey")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 1)
-      val hist = sizes.groupBy("n").agg(count(lit(1)).as("buckets"))
-        .orderBy(col("n").desc)
-      println("bucket-size histogram (size -> buckets), top 30:")
-      hist.limit(30).collect().foreach(r =>
-        println(s"  n=${r.getLong(0)} buckets=${r.getLong(1)}"))
-      val agg = sizes.agg(count(lit(1)).as("nb"), max("n").as("mx"),
-        expr("percentile(n, 0.5)").as("p50"),
-        expr("percentile(n, 0.99)").as("p99"),
-        sum(expr("n * (n - 1) / 2")).as("candidate_pairs")).collect()(0)
-      println(s"buckets=${agg.get(0)} max=${agg.get(1)} p50=${agg.get(2)} " +
-        s"p99=${agg.get(3)} candidatePairs=${agg.get(4)}")
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_MEDIA")) {
-      // media near-dup ablation: where do q115/q116 spend their wall?
-      import org.apache.spark.sql.functions._
-      implicit val sp: SparkSession = spark
-      import graft.operators.{Dedup, Multimodal}
-      val docs = graft.sources.Catalog.load(spark, sfDir, "documents")
-      def t[A](tag: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      val blobs = Multimodal.blobsWithReencodes(docs, "doc_id", "text", 5)
-      (1 to 2).foreach { round =>
-        println(s"--- round $round")
-        val sigs = t("sig_barrier")(
-          Dedup.barrier(Multimodal.perceptualSignature(blobs)))
-        // production banding arithmetic via the package-private hook —
-        // the ablation arms cannot drift from Multimodal's tables
-        def pairsWith(blockCount: Int, keep: Int, tag: String): Unit = {
-          val n = t(tag)(Multimodal
-            .bandedCandidates(sigs, "media_id", blockCount, keep).count())
-          println(s"  $tag candidates=$n")
-        }
-        val nSigs = t("distinct_kind_sig")(
-          sigs.select("kind", "sig").distinct().count())
-        println(s"  total=${sigs.count()} distinctSig=$nSigs")
-        pairsWith(4, 1, "cand_old_4x15bit")
-        pairsWith(6, 3, "cand_new_C63_30bit")
-        pairsWith(5, 2, "cand_C52_24bit")
-        val pairs = t("pairs_full_current")(
-          Multimodal.perceptualNearDupPairs(blobs).count())
-        println(s"  pairs=$pairs")
-        t("q116_full")(
-          Multimodal.perceptualDedupSurvivors(blobs).queryExecution
-            .toRdd.foreach(_ => ()))
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_IMG")) {
-      // q120 ablation: fixture encode vs decode+hash vs banding
-      implicit val sp: SparkSession = spark
-      import graft.operators.{Dedup, Multimodal}
-      val docs = graft.sources.Catalog.load(spark, sfDir, "documents")
-      def t[A](tag: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      (1 to 2).foreach { round =>
-        println(s"--- round $round")
-        val blobs = Multimodal.imageBlobsFromDocs(docs, "doc_id", "text")
-        val nb = t("encode_only")(blobs.count())
-        println(s"  blobs=$nb")
-        val sigs = t("sig_barrier")(
-          Dedup.barrier(Multimodal.decodedSignature(blobs)
-            .select("media_id", "kind", "sig")))
-        println(s"  sigs=${sigs.count()}")
-        val n = t("full_query")(
-          Multimodal.decodedNearDupPairs(blobs, maxDist = 2).count())
-        println(s"  pairs=$n")
-        // the materialized-table path q120 actually runs
-        val mat = graft.SparkEntry.queries("q120_decoded_near_dup")
-        val nm = t("q120_materialized")(
-          mat(spark, sfDir).queryExecution.toRdd.count())
-        println(s"  q120rows=$nm")
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_MERKLE")) {
-      // q70/q71 floor ablation: how much of the diff's wall is the
-      // artifact scan + per-job constant vs the join itself?
-      import org.apache.spark.sql.functions.col
-      def t[A](tag: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      graft.SparkEntry.prepare(spark, sfDir)
-      (1 to 3).foreach { round =>
-        println(s"--- round $round")
-        t("job_launch_floor")(spark.range(1).queryExecution.toRdd.count())
-        val fa = graft.SparkEntry.queries("q70_property_merkle_diff")
-        // the two artifact paths the diff reads, scanned bare
-        val key = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-        val la = spark.read.parquet(
-          s"/root/repo/target/graft-io/propleaves_a_$key/leaves")
-        val lb = spark.read.parquet(
-          s"/root/repo/target/graft-io/propleaves_b_$key/leaves")
-        t("scan_leaves_a")(la.queryExecution.toRdd.count())
-        t("scan_leaves_b")(lb.queryExecution.toRdd.count())
-        t("scan_both_union")(la.unionByName(lb).queryExecution.toRdd.count())
-        t("diff_join_full")(
-          graft.storage.PropertyStore.merkleDiffFromLeaves(la, lb)
-            .queryExecution.toRdd.count())
-        t("q70_query_fn")(fa(spark, sfDir).queryExecution.toRdd.count())
-        t("q71_query_fn")(graft.SparkEntry.queries("q71_property_repair_plan")(
-          spark, sfDir).queryExecution.toRdd.count())
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_WINNOW")) {
-      // q78 funnel breakdown (r15 verdict #3): co-posting rows the
-      // unfiltered self-join would generate vs prefix postings vs
-      // candidate pairs vs emitted — plus the full-query wall. Drives
-      // the BASELINE.md prefix-filter analysis.
-      import graft.operators.Dedup
-      val docs = graft.sources.Catalog.load(spark, sfDir, "documents")
-      def t[A](tag: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      (1 to 2).foreach { round =>
-        println(s"--- round $round")
-        val funnel = t("funnel")(Dedup.winnowingPairsFunnel(
-          docs, "doc_id", "text"))
-        println("  " + funnel.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-          .mkString(" "))
-        val n = t("q78_full")(Dedup.winnowingPairs(docs, "doc_id", "text")
-          .queryExecution.toRdd.count())
-        println(s"  pairs=$n")
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_MINHASH")) {
-      // q24 funnel breakdown (r12 verdict #3): candidates generated vs
-      // size-gate survivors vs verified-emitted, plus the full-query wall
-      // before/after the gate — drives the BASELINE.md q24 analysis.
-      import graft.operators.Dedup
-      val docs = graft.sources.Catalog.load(spark, sfDir, "documents")
-      def t[A](tag: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      (1 to 2).foreach { round =>
-        println(s"--- round $round")
-        val funnel = t("funnel")(Dedup.minhashLshFunnel(
-          docs, "doc_id", "text", w = 3, bands = 32, rowsPerBand = 2,
-          threshold = 0.5))
-        println("  " + funnel.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-          .mkString(" "))
-        val n = t("q24_full")(Dedup.minhashLshPairs(
-          docs, "doc_id", "text", w = 3, bands = 32, rowsPerBand = 2,
-          threshold = 0.5).queryExecution.toRdd.count())
-        println(s"  pairs=$n")
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_CC_LIVE")) {
-      // q116 pipeline wall-time split, LIVE (not simulated): pair
-      // generation vs distributed clustering vs driver-path clustering
-      // on the same barriered pair list.
-      implicit val sp: SparkSession = spark
-      import graft.operators.{Dedup, Multimodal}
-      val docs = graft.sources.Catalog.load(spark, sfDir, "documents")
-      def t[A](tag: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      val blobs = Multimodal.blobsWithReencodes(docs, "doc_id", "text", 5)
-      (1 to 2).foreach { round =>
-        println(s"--- round $round")
-        val pairs = t("pairs_barrier")(Dedup.barrier(
-          Multimodal.perceptualNearDupPairs(blobs, maxDist = 3)
-            .select("id_a", "id_b")))
-        println(s"  edges=${pairs.count()}")
-        spark.conf.set("spark.graft.dedup.clusters.driverMaxEdges", "0")
-        val distLabels = t("clusters_distributed")(Dedup.dedupClusters(pairs))
-        println(s"  labels=${distLabels.count()}")
-        spark.conf.set("spark.graft.dedup.clusters.driverMaxEdges",
-          (1L << 40).toString)
-        val drvLabels = t("clusters_driver")(Dedup.dedupClusters(pairs))
-        println(s"  labels=${drvLabels.count()}")
-        // hybrid arm — the DEFAULT config (2^20 gate): the sf5 graph's
-        // 5.8M edges exceed the gate, star rounds run until the list
-        // contracts under it, then the driver union-find finishes
-        spark.conf.unset("spark.graft.dedup.clusters.driverMaxEdges")
-        val hybLabels = t("clusters_hybrid_default")(Dedup.dedupClusters(pairs))
-        println(s"  labels=${hybLabels.count()}")
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_CC")) {
-      // q116-at-sf25 convergence diagnosis: collect the perceptual pair
-      // graph, report its shape (edges, components, largest, BFS depth
-      // from the min-id node), and SIMULATE the distributed
-      // dedupClusters round rule in memory to count rounds-to-fixpoint.
-      implicit val sp: SparkSession = spark
-      import graft.operators.Multimodal
-      val docs = graft.sources.Catalog.load(spark, sfDir, "documents")
-      val blobs = Multimodal.blobsWithReencodes(docs, "doc_id", "text", 5)
-      val pairs = Multimodal.perceptualNearDupPairs(blobs, maxDist = 3)
-        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-      println(s"edges=${pairs.length}")
-      val adj = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-      pairs.foreach { case (a, b) =>
-        adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-        adj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-      }
-      val nodes = adj.keys.toArray
-      println(s"nodes=${nodes.length}")
-      // components via BFS; track largest + its BFS depth from min id
-      val seen = scala.collection.mutable.HashSet.empty[Long]
-      var comps = 0; var largest = 0; var largestMin = 0L
-      nodes.foreach { n =>
-        if (!seen.contains(n)) {
-          comps += 1
-          var size = 0; var mn = n
-          val q = scala.collection.mutable.Queue(n); seen += n
-          while (q.nonEmpty) {
-            val v = q.dequeue(); size += 1; if (v < mn) mn = v
-            adj(v).foreach(u => if (!seen.contains(u)) { seen += u; q += u })
-          }
-          if (size > largest) { largest = size; largestMin = mn }
-        }
-      }
-      println(s"components=$comps largest=$largest")
-      // BFS depth of largest component from its min node
-      locally {
-        val dist = scala.collection.mutable.HashMap(largestMin -> 0)
-        val q = scala.collection.mutable.Queue(largestMin)
-        var depth = 0
-        while (q.nonEmpty) {
-          val v = q.dequeue()
-          adj(v).foreach { u =>
-            if (!dist.contains(u)) { dist(u) = dist(v) + 1; depth = math.max(depth, dist(u)); q += u }
-          }
-        }
-        println(s"bfs_depth_from_min=$depth")
-      }
-      // simulate the EXACT distributed round rule:
-      // propagated(v) = min(label(v), min_{u~v} label(u));
-      // next(v) = propagated(propagated(v)); stop when next == labels
-      var labels = scala.collection.mutable.HashMap(nodes.map(n => n -> n): _*)
-      var iter = 0; var changedN = 1L
-      while (changedN > 0 && iter < 200) {
-        val propagated = scala.collection.mutable.HashMap.empty[Long, Long]
-        nodes.foreach { v =>
-          var m = labels(v)
-          adj(v).foreach { u => val l = labels(u); if (l < m) m = l }
-          propagated(v) = m
-        }
-        val next = scala.collection.mutable.HashMap.empty[Long, Long]
-        nodes.foreach { v =>
-          val p = propagated(v)
-          next(v) = propagated.getOrElse(p, p)
-        }
-        changedN = nodes.count(v => next(v) != labels(v)).toLong
-        labels = next
-        iter += 1
-        if (iter <= 60 || changedN == 0) println(s"round $iter changed=$changedN")
-      }
-      println(s"rounds_to_fixpoint=$iter")
-      // variant: propagation + FULL pointer-jumping per round (compress
-      // the label chains to idempotence before the next edge round)
-      var labels2 = scala.collection.mutable.HashMap(nodes.map(n => n -> n): _*)
-      var iter2 = 0; var changed2 = 1L
-      while (changed2 > 0 && iter2 < 200) {
-        val prop = scala.collection.mutable.HashMap.empty[Long, Long]
-        nodes.foreach { v =>
-          var m = labels2(v)
-          adj(v).foreach { u => val l = labels2(u); if (l < m) m = l }
-          prop(v) = m
-        }
-        // full compression: chase labels to their root
-        def root(x: Long): Long = {
-          var r = x
-          var hops = 0
-          while (prop.getOrElse(r, r) != r && hops < 1000000) { r = prop.getOrElse(r, r); hops += 1 }
-          r
-        }
-        val next = scala.collection.mutable.HashMap.empty[Long, Long]
-        nodes.foreach(v => next(v) = root(v))
-        changed2 = nodes.count(v => next(v) != labels2(v)).toLong
-        labels2 = next
-        iter2 += 1
-      }
-      println(s"rounds_to_fixpoint_fullcompress=$iter2")
-      println(s"labels_agree=${nodes.forall(v => labels(v) == labels2(v))}")
-      // variant: alternating large-star / small-star (Kiveris et al.,
-      // "Connected Components in MapReduce and Beyond", SoCC'14) — edge
-      // REWIRING, so distant nodes become direct neighbors and rounds
-      // are O(log²) in the worst case instead of O(diameter)
-      locally {
-        var E = pairs.map { case (a, b) =>
-          (math.min(a, b), math.max(a, b)) }.distinct.filter(p => p._1 != p._2).toSet
-        def neighborhoods(es: Set[(Long, Long)]) = {
-          val g = scala.collection.mutable.HashMap
-            .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-          es.foreach { case (a, b) =>
-            g.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-            g.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-          }
-          g
-        }
-        def largeStar(es: Set[(Long, Long)]): Set[(Long, Long)] = {
-          val g = neighborhoods(es)
-          val out = scala.collection.mutable.HashSet.empty[(Long, Long)]
-          g.foreach { case (u, nbrs) =>
-            val m = math.min(u, nbrs.min)
-            nbrs.foreach(v => if (v > u && v != m) out += ((math.min(v, m), math.max(v, m))))
-          }
-          out.toSet
-        }
-        def smallStar(es: Set[(Long, Long)]): Set[(Long, Long)] = {
-          val g = neighborhoods(es)
-          val out = scala.collection.mutable.HashSet.empty[(Long, Long)]
-          g.foreach { case (u, nbrs) =>
-            val m = math.min(u, nbrs.min)
-            (nbrs.filter(_ <= u) :+ u).foreach(v =>
-              if (v != m) out += ((math.min(v, m), math.max(v, m))))
-          }
-          out.toSet
-        }
-        var rounds = 0
-        var stable = false
-        while (!stable && rounds < 100) {
-          val e1 = largeStar(E)
-          val e2 = smallStar(e1)
-          stable = e2 == E
-          E = e2
-          rounds += 1
-        }
-        println(s"rounds_star=$rounds")
-        // star labels: root per component (+ singletons implicit)
-        val lbl = scala.collection.mutable.HashMap.empty[Long, Long]
-        E.foreach { case (r, v) =>
-          lbl(v) = math.min(r, lbl.getOrElse(v, Long.MaxValue))
-          lbl(r) = math.min(r, lbl.getOrElse(r, Long.MaxValue))
-        }
-        nodes.foreach(v => if (!lbl.contains(v)) lbl(v) = v)
-        println(s"labels_agree_star=${nodes.forall(v => lbl(v) == labels(v))}")
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SCRATCH_ABLATE")) {
-      import org.apache.spark.sql.functions._
-      val df = graft.sources.Catalog.load(spark, sfDir, "events")
-        .withColumn("bucket_min", expr("ts_ns DIV 60000000000"))
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val dur = for {
-              s <- si.submissionTime; e <- si.completionTime
-            } yield e - s
-            stages.add(s"stage${si.stageId} tasks=${si.numTasks} " +
-              s"dur=${dur.getOrElse(-1L)}ms " +
-              s"runTime=${si.taskMetrics.executorRunTime}ms " +
-              s"cpuTime=${si.taskMetrics.executorCpuTime / 1000000}ms " +
-              s"deserTime=${si.taskMetrics.executorDeserializeTime}ms " +
-              s"gc=${si.taskMetrics.jvmGCTime}ms " +
-              s"shufWrite=${si.taskMetrics.shuffleWriteMetrics.bytesWritten} " +
-              s"spill=${si.taskMetrics.diskBytesSpilled}")
-          }
-        })
-      def time(tag: String)(mk: => org.apache.spark.sql.DataFrame): Unit =
-        (1 to 4).foreach { i =>
-          stages.clear()
-          val t0 = System.nanoTime()
-          mk.queryExecution.toRdd.foreach(_ => ())
-          println(f"$tag run$i ${(System.nanoTime() - t0) / 1e9}%.3f s")
-          if (i == 4) {
-            Thread.sleep(300)
-            stages.forEach(s => println(s"  $s"))
-          }
-        }
-      val split8 = s"/tmp/scratch_events8"
-      if (!new java.io.File(split8).exists())
-        df.repartition(16).write.mode("overwrite").parquet(split8)
-      val df16 = spark.read.parquet(split8)
-      time("A16_count")(df16.groupBy("user_id", "bucket_min")
-        .agg(count(lit(1)).as("c")))
-      time("C16_minstruct")(df16.groupBy("user_id", "bucket_min")
-        .agg(graft.functions.MinStructAgg.minStruct(struct(
-          negate(col("event_id")).as("__negv"), col("value"))).as("__lv")))
-      time("A_count")(df.groupBy("user_id", "bucket_min")
-        .agg(count(lit(1)).as("c")))
-      time("B_maxby")(df.groupBy("user_id", "bucket_min")
-        .agg(max_by(col("value"), col("event_id")).as("value"),
-          max(col("event_id")).as("version")))
-      time("C_minstruct")(df.groupBy("user_id", "bucket_min")
-        .agg(graft.functions.MinStructAgg.minStruct(struct(
-          negate(col("event_id")).as("__negv"), col("value"))).as("__lv")))
-      time("D_scan")(df.select("user_id", "bucket_min", "event_id", "value"))
-      spark.stop(); return
-    }
     val names = args.toSeq match {
       case Nil => Seq("q15_version_dedup", "q14_element_dedup")
       case xs  => xs

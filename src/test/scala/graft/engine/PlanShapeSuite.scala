@@ -146,14 +146,17 @@ class PlanShapeSuite extends SparkSpec {
     // a corpus-sized side is broadcast exactly where its size is unknown
     import graft.operators.Dedup
     import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, ResolvedHint}
-    def gated(barrier: String) = {
+    def gated(barrier: String,
+        maxBytes: Option[Long] => Long = _ => Dedup.BroadcastGateBytes) = {
       spark.conf.set("spark.graft.dedup.barrier", barrier)
       try {
         val postings = Dedup.barrier(spark.range(1000).toDF("id"))
         postings.count()
+        val bytes = org.apache.spark.sql.graftbridge.Bridge.materializedBytes(postings)
         val dim = spark.range(100).toDF("id")
-        val joined = postings.join(Dedup.broadcastIfBounded(dim, postings), "id")
-        val out = (org.apache.spark.sql.graftbridge.Bridge.materializedBytes(postings),
+        val joined = postings.join(
+          Dedup.broadcastIfBounded(dim, postings, maxBytes(bytes)), "id")
+        val out = (bytes,
           joined.queryExecution.analyzed.collect { case h: ResolvedHint => h },
           joined.queryExecution.optimizedPlan.collect { case j: Join => j.hint })
         postings.unpersist()
@@ -167,6 +170,11 @@ class PlanShapeSuite extends SparkSpec {
     // the control: a measured barrier keeps the hint
     val (measured, kept, _) = gated("localCheckpoint")
     assert(measured.exists(_ > 0) && kept.nonEmpty, s"$measured, $kept")
+    // measured, but one byte over the gate: a plain join again
+    val (over, overHints, overJoinHints) = gated("localCheckpoint", _.get - 1)
+    assert(over.exists(_ > 0), s"$over")
+    assert(overHints.isEmpty, s"broadcast hint above the gate: $overHints")
+    assert(overJoinHints == Seq(JoinHint.NONE), overJoinHints.toString)
   }
 
   test("q53 curation: AQE converts the dedup-survivor join to a broadcast") {

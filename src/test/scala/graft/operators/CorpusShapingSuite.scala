@@ -422,9 +422,9 @@ class CorpusShapingSuite extends SparkSpec {
     assert(pairs.head._4 >= 0.25 && pairs.head._4 <= 1.0)
   }
 
-  /** The pre-prefix-filter winnow pair join, verbatim (explode → df cap →
-    * full posting self-join → count → normalize): the differential oracle
-    * for the PPJoin prefix filter's losslessness. */
+  /** The winnow pair join without barriers or size-derived repartitioning
+    * (explode → df cap → full posting self-join → count → normalize): the
+    * differential oracle for [[Dedup.winnowingPairs]]. */
   private def naiveWinnowPairs(docs: org.apache.spark.sql.DataFrame,
       threshold: Double, minShared: Int, maxDocFreq: Int): Set[(Long, Long, Long, Double)] = {
     val fps = TextAnalysis.winnowFingerprints(docs, "doc_id", "text", 16, 8)
@@ -452,16 +452,15 @@ class CorpusShapingSuite extends SparkSpec {
       .toSet
   }
 
-  test("winnowingPairs: prefix-filtered join is LOSSLESS vs the full posting self-join " +
-      "(seeded random corpora × parameter grid)") {
+  test("winnowingPairs equals the naive pairs (seeded corpora × params)") {
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
       "theta", "kappa", "lambda", "sigma", "omega", "quartz", "nebula",
       "raven", "cobalt", "ember")
     for (seed <- Seq(101, 202, 303)) {
       val rnd = new scala.util.Random(seed)
       // hot boilerplate shared by MANY docs (drives posting df toward and
-      // past the cap — the exact term the prefix filter attacks), near-dup
-      // clusters from small perturbations, singletons, and sub-window docs
+      // past the cap), near-dup clusters from small perturbations,
+      // singletons, and sub-window docs
       val boiler = (1 to 12).map(_ => words(rnd.nextInt(words.size))).mkString(" ")
       val base = (0 until 8).map(_ =>
         (1 to 20).map(_ => words(rnd.nextInt(words.size))).mkString(" "))
@@ -485,34 +484,15 @@ class CorpusShapingSuite extends SparkSpec {
       for ((t, ms, cap) <- Seq((0.25, 3, 128), (0.15, 1, 8), (0.5, 2, 4),
           (0.05, 1, 128), (0.9, 1, 64))) {
         val want = naiveWinnowPairs(docs, t, ms, cap)
-        // both arms of the adaptive switch on the same corpus: the
-        // prefix-filtered plan (the scale path) and the direct self-join
-        // (the toy path) must emit identical pairs
-        for (mode <- Seq("on", "off")) {
-          spark.conf.set("spark.graft.dedup.winnow.prefixFilter", mode)
-          try {
-            val got = Dedup.winnowingPairs(docs, "doc_id", "text",
-              k = 16, w = 8, threshold = t, minShared = ms, maxDocFreq = cap)
-              .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-              .toSet
-            assert(got == want,
-              s"seed $seed mode=$mode t=$t minShared=$ms cap=$cap: " +
-                s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-          } finally spark.conf.unset("spark.graft.dedup.winnow.prefixFilter")
-        }
+        val got = Dedup.winnowingPairs(docs, "doc_id", "text",
+          k = 16, w = 8, threshold = t, minShared = ms, maxDocFreq = cap)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+          .toSet
+        assert(got == want,
+          s"seed $seed t=$t minShared=$ms cap=$cap: " +
+            s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
       }
     }
-  }
-
-  test("winnowingPairsFunnel: prefix candidates are a subset of unfiltered co-postings " +
-      "and a superset of emitted pairs") {
-    val boiler = (1 to 30).map(i => s"wq$i xv$i").mkString(" ")
-    val docs = docsOf((1L to 12L).map(i =>
-      i -> s"$boiler variant tail number $i with extra ${"pad " * i.toInt}"))
-    val f = Dedup.winnowingPairsFunnel(docs, "doc_id", "text")
-    assert(f("prefix_rows") > 0 && f("prefix_rows") <= f("posting_rows"), f.toString)
-    assert(f("candidate_pairs") <= f("coposting_rows_unfiltered"), f.toString)
-    assert(f("emitted_pairs") <= f("candidate_pairs"), f.toString)
   }
 
   test("qualityModelScore: exact integer logit, threshold cut matches by hand") {

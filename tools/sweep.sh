@@ -1,17 +1,17 @@
 #!/bin/bash
-# Round-15 trend sweep — the r14 script with the warm column: Bench now
-# executes every plan twice (cold+warm, SPARK_GRAFT_BENCH_WARM default
-# on), so each bench_*.json carries `queries` (cold) AND `queries_warm`.
-# trend_r15.py publishes min-cold (cross-round comparable) and min-warm
-# (the steady-state/reused-plan number) side by side.
+# Trend sweep: Bench executes every plan twice (cold+warm,
+# SPARK_GRAFT_BENCH_WARM default on), so each bench_*.json carries
+# `queries` (cold) AND `queries_warm`. tools/trend.py publishes min-cold
+# (cross-round comparable) and min-warm (the steady-state/reused-plan
+# number) side by side.
 # Driver-facing graft.Bench defaults to COLD_PASSES=2 (min-of-2 in-JVM);
 # the sweep pins 1 because run a/b already take the min across separate
 # JVMs - same discipline, half the wall.
 # Serial on purpose — timing purity (never co-tenant sbt with a timing
 # pass; verify skill).
 set -xe
-cd /root/repo
-T=target/trend_r15
+cd "$(dirname "$0")/.."
+T=target/trend
 mkdir -p "$T"
 
 calibrate() {  # $1 = tag
@@ -36,7 +36,7 @@ for sf in sf01:/root/testdata/sf0.1 sf1:/root/repo/target/scale-sf1 sf5:/root/re
 done
 
 # --- bench: 2 runs per SF (each run = cold + warm pass per query),
-# per-query min taken by trend_r15.py. SPARK_DRIVER_MEM=8g (the r14
+# per-query min taken by tools/trend.py. SPARK_DRIVER_MEM=8g (the r14
 # heap-sizing lesson: 48g is strictly worse on shuffle-heavy sf5).
 for sf in sf01:/root/testdata/sf0.1 sf1:/root/repo/target/scale-sf1 sf5:/root/repo/target/scale-sf5; do
   name=${sf%%:*}; dir=${sf#*:}
@@ -53,12 +53,12 @@ done
 # --- DuckDB side, each SF against ITS OWN oracle dump
 calibrate duck_pre
 ORACLE_QUERY_TIMEOUT_S=1800 python3 tools/time_oracle.py /root/testdata/sf0.1 \
-  "$T/oracle_sf01/oracle_sql.json" > "$T/duck_sf01.json" 2> target/duck_r15_sf01.log
+  "$T/oracle_sf01/oracle_sql.json" > "$T/duck_sf01.json" 2> "$T/duck_sf01.log"
 ORACLE_QUERY_TIMEOUT_S=1800 python3 tools/time_oracle.py target/scale-sf1 \
-  "$T/oracle_sf1/oracle_sql.json" > "$T/duck_sf1.json" 2> target/duck_r15_sf1.log
+  "$T/oracle_sf1/oracle_sql.json" > "$T/duck_sf1.json" 2> "$T/duck_sf1.log"
 # sf5: the all-pairs media oracles are O(n^2) — a 900 s cap per query is
 # already a failure proof many times over Spark's cost
 ORACLE_QUERY_TIMEOUT_S=900 python3 tools/time_oracle.py target/scale-sf5 \
-  "$T/oracle_sf5/oracle_sql.json" > "$T/duck_sf5.json" 2> target/duck_r15_sf5.log
+  "$T/oracle_sf5/oracle_sql.json" > "$T/duck_sf5.json" 2> "$T/duck_sf5.log"
 calibrate duck_post
-echo SWEEP_R15_DONE
+echo SWEEP_DONE

@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""Round-15 trend assembly: min-of-N Spark runs vs DuckDB timings at
+"""Trend assembly: min-of-N Spark runs vs DuckDB timings at
 sf0.1 / sf1 / sf5 over the shared oracle-checked surface, with BOTH the
-cold column (cross-round comparable) and the new WARM column (each
+cold column (cross-round comparable) and the WARM column (each
 Bench run re-executes every plan once more after the cold timing — the
 steady-state number a reused plan pays), plus the box-hour CALIBRATION
 block so cross-round deltas decompose into box-drift x code.
 
-Inputs under target/trend_r15/ (written by tools/sweep_r15.sh):
+Inputs under target/trend/ (written by tools/sweep.sh):
   bench_{sf01,sf1,sf5}_{a,b}.json   raw Bench lines (queries + queries_warm)
   duck_{sf01,sf1,sf5}.json          time_oracle.py output (per-SF oracle)
   cal_spark_*.json / cal_duck_*.json  calibration workloads
@@ -15,7 +15,7 @@ import glob
 import json
 import os
 
-D = 'target/trend_r15'
+D = 'target/trend'
 RUNS = ('a', 'b', 'c', 'd')  # c/d = optional targeted re-runs
 CAL_QS = ('q01_scan_timerange', 'q35_lineitem_pricing')
 
