@@ -18,46 +18,28 @@ object Bench {
     } catch { case NonFatal(e) => Left(e) }
   }
 
+  /** UNTIMED isolation between timed runs: each query starts from the
+    * clean-session state it would have alone. */
+  private[graft] def isolate(spark: SparkSession): Unit = {
+    // drop storage blocks the finished query left behind (dedup barriers
+    // localCheckpoint intermediates; the ContextCleaner frees them only on
+    // a GC, and measured r6 the accreted blocks degraded the NEXT several
+    // queries 2-7×; at sf25 q78 completed run 1 and OOM'd run 2)
+    try spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    catch { case _: Throwable => () }
+    // explicit GC: the ContextCleaner only discovers dead
+    // broadcasts/shuffles/RDDs when their references are COLLECTED —
+    // without this the JVM defers collection until it lands inside a
+    // later query's measurement (measured r8: q71 timed 9.3s after the
+    // dedup-pipeline query vs 2.4s isolated). Collecting between
+    // timings moves that reclamation cost off the clock.
+    try System.gc() catch { case _: Throwable => () }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores — the deployment target is local[32]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spark-docs-recommended production setting: coalesce post-shuffle
-      // partitions to the target size instead of maximizing parallelism —
-      // fewer, fuller reduce tasks per stage.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // NOTE a session-wide initialPartitionNum was tried for scale
-      // robustness and REJECTED: A/B/A/B at sf0.1 measured 78-90 s at the
-      // fixed core count vs 95-98 s at 136 initial partitions — per-map
-      // bucket overhead × hundreds of toy-scale shuffles. Scale-dependent
-      // partitioning lives IN the heavy operators instead, derived from
-      // their barriered inputs' measured bytes (Dedup.scaledPartitions).
-      // Scan-split size matched to the LOCAL scale factors (Spark tuning
-      // guidance: size maxPartitionBytes so every core gets work at the
-      // target SF). The 128m default is right for a 100 TB cluster but
-      // serializes a toy-scale scan into one task when a table is a single
-      // ~100 MB file.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // Post-shuffle advisory size gets the same local-scale treatment as
-      // the scan split above: the 64m default folds every toy-scale
-      // aggregation onto ONE reduce task (measured: q81's two ~16 MB
-      // aggregations ran single-threaded, 0.7 s each at sf1; 4m runs them
-      // 4-way and halves the query). A 100 TB deployment keeps the
-      // default — this knob, like maxPartitionBytes, is sized to the SF
-      // the local bench actually runs.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      // NOTE: spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-      // stays at its default (128): raising it to 1M was measured 23%
-      // SLOWER on this surface at sf1 — with nearly-unique keys partial
-      // aggregation combines nothing, and the sort-based fallback streams
-      // groups cache-friendly where a giant object hash map churns GC.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Every failure, by the name of the query or set-up step that threw:
     // listed as `failed` on the bench line, and the run exits non-zero.
@@ -148,26 +130,9 @@ object Bench {
     // their min across separate JVMs is the genuinely-cold min.
     val coldPasses = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD_PASSES", "2").toInt)
-    def isolate(): Unit = {
-      // UNTIMED inter-query isolation: drop storage blocks the finished
-      // query left behind (dedup barriers localCheckpoint intermediates;
-      // the ContextCleaner frees them only on a GC, and measured r6 the
-      // accreted blocks degraded the NEXT several queries 2-7×). Each
-      // query starts from the clean-session state it would have alone.
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
-      // UNTIMED explicit GC: the ContextCleaner only discovers dead
-      // broadcasts/shuffles/RDDs when their references are COLLECTED —
-      // without this the JVM defers collection until it lands inside a
-      // later query's measurement (measured r8: q71 timed 9.3s after the
-      // dedup-pipeline query vs 2.4s isolated). Collecting between
-      // timings moves that reclamation cost off the clock.
-      try System.gc() catch { case _: Throwable => () }
-    }
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t = timeQuery(spark, sfDir, fn).fold(e => { fail(name, e); Double.NaN }, identity)
-      isolate()
+      isolate(spark)
       t
     }
     val timed = selected.toSeq.map { case (name, fn) =>

@@ -1,31 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan inspector: print the formatted physical plan of named
   * SparkEntry queries without executing them —
-  * `sbt -batch "runMain graft.Explain <sfDir> <q1,q2,...>"`. */
+  * `sbt -batch "runMain graft.Explain <sfDir> <q1,q2,...>"`. Every plan is
+  * printed; the run exits 1 if any query threw. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
+    val failed = names.filter { n =>
+      SparkEntry.queries.get(n).exists { fn =>
         println(s"===== $n =====")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+        try { fn(spark, sfDir).explain("formatted"); false }
+        catch { case NonFatal(e) => println(s"failed: $e"); true }
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[explain] ${failed.length} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 /**
  * SQL surface of the engine's native Catalyst expressions. Register via
  * `spark.sql.extensions=graft.GraftExtensions` (or
- * `SparkSession.builder.withExtensions(new GraftExtensions)`), after which
+ * `GraftSession.builder(cores).withExtensions(new GraftExtensions)`), after which
  * plain SQL can call the codegen'd kernels:
  *
  * {{{

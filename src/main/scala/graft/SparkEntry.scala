@@ -638,10 +638,6 @@ object SparkEntry {
     * Rebuilds when the source files change (size+mtime fingerprint);
     * re-registers into the session catalog on every call. */
   private def ensureBenchTables(s: SparkSession, d: String): Unit = {
-    // diagnostics-only escape hatch: serve queries from the raw uploads
-    // to A/B the ingest itself (measured sf0.1: raw is ~11% SLOWER overall
-    // — the layout wins on the heavy queries and is a wash on small ones)
-    if (sys.env.get("SPARK_GRAFT_RAW_TABLES").contains("1")) return
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>

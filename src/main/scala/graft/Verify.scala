@@ -1,53 +1,45 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.io.File
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws leaves no output directory (an earlier run's is deleted first),
+  * is named on stderr, and makes the run exit 1 once the oracle SQL is
+  * written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to the machine's cores — the deployment target is local[32]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    new File(outDir).mkdirs()
     // optional comma-separated filter for fast single-query iteration
     // (mirrors Bench's SPARK_GRAFT_BENCH_ONLY); unset = full surface
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        val out = new File(s"$outDir/$name")
+        if (out.exists) FileUtils.forceDelete(out)
+        try { fn(spark, sfDir).coalesce(1).write.parquet(out.getPath); None }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: $e")
+          Some(name)
+        }
       }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // oracleSqlFor derives the learned-tokenizer twins from THIS sfDir's
     // materialized artifact (not from whichever query ran last), so a
     // filtered verify pass still dumps the full, correct oracle surface
-    val json = SparkEntry.oracleSqlFor(spark, sfDir)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.server.Json.render(SparkEntry.oracleSqlFor(spark, sfDir)))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.length} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

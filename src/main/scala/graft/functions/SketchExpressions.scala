@@ -168,7 +168,7 @@ object SketchImpl {
     * compiled O(n) pass. */
   def termCounts(text: UTF8String): ArrayData = {
     val t = tokens(text)
-    val m = new java.util.LinkedHashMap[String, Long]()
+    val m = new java.util.LinkedHashMap[String, java.lang.Long]()
     var i = 0
     while (i < t.length) {
       val prev = m.get(t(i))

@@ -123,30 +123,21 @@ object CorpusStats {
       if (barrierModel) Dedup.barrier(model) else model)
   }
 
-  /** Score a `(id, n_tokens, __pairs)` frame against a model. The join
-    * shape follows `spark.graft.corpus.unigramJoin`: `broadcast`
-    * (default — the vocabulary-bounded model as a broadcast hash join;
-    * NOTE Spark's 8 GB broadcast cap, see the scale note above) or
-    * `shuffle` (no hint — AQE degrades gracefully when a pathological
-    * vocabulary outgrows the cap). A broadcast single-row
+  /** Score a `(id, n_tokens, __pairs)` frame against a model: the
+    * vocabulary-bounded model as a broadcast hash join (NOTE Spark's
+    * 8 GB broadcast cap, see the scale note above). A broadcast single-row
     * `map<tok,lp>` variant was measured 4× SLOWER at sf1: Spark's
     * `MapData` is array-backed, so `element_at` is a linear scan per
     * lookup — O(pairs × V), not O(pairs). */
   private def scoreAgainst(docs: DataFrame, model: DataFrame,
-      idCol: String): DataFrame = {
-    val m = docs.sparkSession.conf
-      .get("spark.graft.corpus.unigramJoin", "broadcast") match {
-      case "shuffle" => model
-      case _ => broadcast(model)
-    }
+      idCol: String): DataFrame =
     docs.select(col("id"), explode(col("__pairs")).as("p"))
       .select(col("id"), col("p.tok").as("tok"), col("p.c").as("__cdt"))
-      .join(m, Seq("tok"))
+      .join(broadcast(model), Seq("tok"))
       .groupBy("id")
       .agg(sum("__cdt").as("n_tokens"),
         sum(col("__cdt") * col("lp_micros_tok")).as("lp_micros"))
       .withColumnRenamed("id", idCol)
-  }
 
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val (docs, model) = unigramParts(df, idCol, textCol)

@@ -181,33 +181,34 @@ object BydbQL {
    * the statement itself with its wall-clock; children are the executed
    * physical operators with their `executedPlan.metrics` as tags.
    *
-   * NOTE a traced statement executes HERE to populate the metrics; a
-   * caller that then consumes the returned DataFrame re-executes the
-   * plan (same rows — every statement is deterministic under the fixed
-   * `now`). That mirrors the reference, where tracing wraps the real
-   * execution and the result ships with the trace; callers that need
-   * one-pass semantics should collect from the returned frame and keep
-   * the trace as a side-channel.
+   * A traced statement executes once: its rows are collected here, the
+   * spans are read from the plan that produced them, and the returned
+   * frame is a local relation over those rows, so consuming it runs no
+   * Spark job. If execution fails the trace is marked `error` and the
+   * planned frame is returned, so its consumer sees the failure.
    */
   def runTraced(ql: String, resources: Map[String, Resource],
       params: Seq[Any] = Nil, now: Instant = Instant.now()): (DataFrame, Option[QueryTrace]) = {
-    val df = run(ql, resources, params, now)
-    val wantsTrace = parse(ql) match {
+    val stmt = bind(parse(ql), params)
+    val df = plan(stmt, resources, now, Planners.OneTaskMaxBytes)
+    val wantsTrace = stmt match {
       case s: QlSelect => s.withQueryTrace
       case _ => false
     }
     if (!wantsTrace) (df, None)
     else {
       val t0 = System.nanoTime()
-      val error =
-        try { df.queryExecution.toRdd.foreach(_ => ()); false }
-        catch { case scala.util.control.NonFatal(_) => true }
+      val rows =
+        try Some(df.collect())
+        catch { case scala.util.control.NonFatal(_) => None }
       val wallMs = (System.nanoTime() - t0) / 1000000L
       val root = QuerySpan("bydbql: " + ql.trim, wallMs,
         Seq(QuerySpanTag("statement", ql)),
-        if (error) Nil else Seq(spanOf(df.queryExecution.executedPlan)))
-      (df, Some(QueryTrace(java.util.UUID.randomUUID().toString,
-        Seq(root), error)))
+        if (rows.isEmpty) Nil else Seq(spanOf(df.queryExecution.executedPlan)))
+      val out = rows.fold(df)(r =>
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(r: _*), df.schema))
+      (out, Some(QueryTrace(java.util.UUID.randomUUID().toString,
+        Seq(root), rows.isEmpty)))
     }
   }
 
@@ -218,8 +219,11 @@ object BydbQL {
     * as one task (0 keeps every statement multi-partition). */
   def run(ql: String, resources: Map[String, Resource],
       params: Seq[Any] = Nil, now: Instant = Instant.now(),
-      oneTaskMaxBytes: Long = Planners.OneTaskMaxBytes): DataFrame = {
-    val stmt = bind(parse(ql), params)
+      oneTaskMaxBytes: Long = Planners.OneTaskMaxBytes): DataFrame =
+    plan(bind(parse(ql), params), resources, now, oneTaskMaxBytes)
+
+  private def plan(stmt: QlStatement, resources: Map[String, Resource],
+      now: Instant, oneTaskMaxBytes: Long): DataFrame = {
     val (name, groups) = stmt match {
       case s: QlSelect => (s.from.name, s.from.groups)
       case t: QlShowTopN => (t.from.name, t.from.groups)

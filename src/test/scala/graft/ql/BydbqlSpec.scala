@@ -5,7 +5,10 @@ import java.time.Instant
 import graft.SparkSpec
 import graft.engine.Planners
 import graft.model._
+import graft.server.{BydbQLHttp, Json}
 import graft.sources.Catalog
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+import org.apache.spark.sql.graftbridge.Jobs
 
 /**
  * BydbQL front-end: grammar coverage over the reference's golden query
@@ -281,5 +284,29 @@ class BydbqlSpec extends SparkSpec {
       s.tags.exists(_.key == "numFiles")), "no scan span with file metrics")
     // renderable for transport/debugging
     assert(trace.render.contains("ms)"))
+
+    // a traced statement executes once: runTraced + resultJson run the
+    // jobs of the untraced statement and return its columns and rows
+    val ql = "SELECT event_type, SUM(value) FROM MEASURE events IN testdata " +
+      "TIME > '-365d' GROUP BY event_type, value"
+    def wire(q: String) = Jobs.during(spark.sparkContext) {
+      val (out, t) = BydbQL.runTraced(q, res, now = now)
+      BydbQLHttp.resultJson(out, t)
+    }
+    def table(json: String) = {
+      val m = Json.parse(json).asInstanceOf[Map[String, Any]]
+      (m("columns"), m("rows").asInstanceOf[List[Any]].map(_.toString).sorted)
+    }
+    val (plain, plainJobs) = wire(ql)
+    val (withTrace, tracedJobs) = wire(ql + " WITH QUERY_TRACE")
+    assert(plainJobs.jobs >= 1)
+    assert(tracedJobs == plainJobs, s"traced $tracedJobs vs untraced $plainJobs")
+    assert(table(withTrace) == table(plain) && table(plain)._2.nonEmpty)
+    // an execution failure marks the trace and still reaches the caller
+    val failing = Map("events" -> res("events").copy(df = df.withColumn("value",
+      when(col("value") > -1e18, raise_error(lit("boom"))).otherwise(col("value")))))
+    val (failed, failedTrace) = BydbQL.runTraced(ql + " WITH QUERY_TRACE", failing, now = now)
+    assert(failedTrace.exists(_.error))
+    intercept[Exception](BydbQLHttp.resultJson(failed, failedTrace))
   }
 }

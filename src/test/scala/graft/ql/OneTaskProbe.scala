@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
 import java.util.{Comparator, SplittableRandom}
 
+import graft.GraftSession
 import graft.engine.Planners
 import graft.sources.{Catalog, TableDef}
 import graft.storage.{CatalogEntry, CatalogStore, Layout}
@@ -26,9 +27,9 @@ import org.apache.spark.sql.functions._
   * }}}
   * `<sf-dir>` holds `events.parquet` and `documents.parquet` (sf0.1's
   * 100,000 events and 5,000 documents are copied with fresh ids to reach
-  * the larger sizes). The session has `graft.Bench`'s settings and one
-  * core per available processor unless `SPARK_GRAFT_CPUS` says
-  * otherwise. */
+  * the larger sizes). The session is the engine's
+  * ([[graft.GraftSession]]), with one core per available processor
+  * unless `SPARK_GRAFT_CPUS` says otherwise. */
 object OneTaskProbe {
 
   private val now = Instant.parse("2024-01-20T00:00:00Z")
@@ -42,17 +43,8 @@ object OneTaskProbe {
     val sizesMb = args.lift(1).map(_.split(",").map(_.toDouble).toSeq)
       .getOrElse(Seq(0.1, 0.25, 0.5, 1, 1.5, 2, 4))
     val rounds = args.lift(2).map(_.toInt).getOrElse(9)
-    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder().master(s"local[$cores]").appName("one-task-probe")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cores = GraftSession.cores
+    val spark = GraftSession.builder(cores).appName("one-task-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val work = Files.createTempDirectory("one-task-probe").toString
     println(s"# local[$cores], $rounds rounds per kind and shape, medians in ms")
