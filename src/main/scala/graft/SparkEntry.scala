@@ -702,6 +702,20 @@ object SparkEntry {
     ()
   }
 
+  /** The [[queries]] a comma-separated name list selects, in list order;
+    * `None` selects every query and an empty list none. Throws naming
+    * every unknown name, so a mistyped query fails the run instead of
+    * reading as an empty, passing one. */
+  def select(names: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    names.fold(all.toSeq) { list =>
+      val wanted = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      val unknown = wanted.filterNot(all.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      wanted.map(n => n -> all(n))
+    }
+  }
+
   // =========================================================================
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

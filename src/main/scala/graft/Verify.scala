@@ -13,24 +13,22 @@ import org.apache.commons.io.FileUtils
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional comma-separated filter for fast single-query iteration
+    // (like Bench's SPARK_GRAFT_BENCH_ONLY); unset = full surface, empty =
+    // no query (the oracle SQL dump alone)
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new File(outDir).mkdirs()
-    // optional comma-separated filter for fast single-query iteration
-    // (mirrors Bench's SPARK_GRAFT_BENCH_ONLY); unset = full surface
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val failed = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-        val out = new File(s"$outDir/$name")
-        if (out.exists) FileUtils.forceDelete(out)
-        try { fn(spark, sfDir).coalesce(1).write.parquet(out.getPath); None }
-        catch { case NonFatal(e) =>
-          System.err.println(s"[verify] $name failed: $e")
-          Some(name)
-        }
+    val failed = selected.flatMap { case (name, fn) =>
+      val out = new File(s"$outDir/$name")
+      if (out.exists) FileUtils.forceDelete(out)
+      try { fn(spark, sfDir).coalesce(1).write.parquet(out.getPath); None }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: $e")
+        Some(name)
       }
+    }
     // oracleSqlFor derives the learned-tokenizer twins from THIS sfDir's
     // materialized artifact (not from whichever query ran last), so a
     // filtered verify pass still dumps the full, correct oracle surface

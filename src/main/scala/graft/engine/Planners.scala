@@ -3,6 +3,7 @@ package graft.engine
 import graft.functions.BanyanSemantics
 import graft.model._
 import graft.sources.TableDef
+import graft.storage.Layout
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,17 +48,8 @@ object Planners {
         // scan as a pushed int64 filter.
         df.schema(name).dataType match {
           case org.apache.spark.sql.types.LongType =>
-            // SATURATING ns conversion: the stored timestamp is int64 nanos
-            // (the reference's representable span, ~1677..2262); an Instant
-            // outside it must clamp to ±Long.MaxValue, not overflow and
-            // flip sign — the stream golden "invalid time range" case spans
-            // [minInt64 ns, maxInt64 ns] and must return everything.
-            def ns(i: java.time.Instant): Long =
-              try Math.addExact(
-                Math.multiplyExact(i.getEpochSecond, 1000000000L), i.getNano.toLong)
-              catch { case _: ArithmeticException =>
-                if (i.getEpochSecond < 0) Long.MinValue else Long.MaxValue }
-            val (bNs, eNs) = (ns(b), ns(e))
+            // saturating: an instant outside the int64-ns span clamps
+            val (bNs, eNs) = (Layout.epochNanos(b), Layout.epochNanos(e))
             // When ts_ns is DERIVED from a physical timestamp column (the
             // timestamp[us] testdata encoding), a filter on the derived
             // column cannot reach the parquet scan; mirror the range onto

@@ -47,8 +47,8 @@ object CorpusStats {
 
   /** One materialization of (id, token array) feeding model-build AND
     * scoring subtrees — one pass over the raw text, doc-sized payload
-    * (smaller than the text itself), same policy knob as the dedup
-    * barriers (`spark.graft.dedup.barrier`). */
+    * (smaller than the text itself), materialized like the dedup
+    * barriers. */
   private def tokenized(df: DataFrame, idCol: String, textCol: String): DataFrame =
     Dedup.barrier(df.select(col(idCol).as("id"), tokensAlnum(col(textCol)).as("toks")))
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * - exact/fingerprint: one hash-partitioned groupBy — the minimum possible
  *   work; AQE handles skew from pathological duplicate clusters.
  * - MinHash/LSH: per-doc signatures are map-only and materialized ONCE
- *   behind a persist barrier (Catalyst's CollapseProject would otherwise
+ *   behind a barrier (Catalyst's CollapseProject would otherwise
  *   inline the tokenizer into every signature lane of every join side).
  *   The band-bucket self-join carries ids only; singleton buckets are
  *   pruned before the join; candidate pairs re-join the (persisted)
@@ -70,8 +70,8 @@ object Dedup {
       maxBytes: Long = BroadcastGateBytes): DataFrame = {
     org.apache.spark.sql.graftbridge.Bridge.materializedBytes(measuredPostings) match {
       case Some(b) if b <= maxBytes => broadcast(dim)
-      // FAIL CLOSED when the size cannot be measured (barrier mode
-      // `persist`, or a frame with no materialized leaf): an unbounded
+      // FAIL CLOSED when the size cannot be measured (a frame with no
+      // materialized leaf): an unbounded
       // broadcast in exactly the configs where bytes are unknowable is
       // the scale-killer this gate exists to prevent — return the frame
       // un-hinted and let AQE pick the strategy from runtime sizes
@@ -80,31 +80,17 @@ object Dedup {
     }
   }
 
-  /** Materialization barrier for intermediates reused across join sides,
-    * selectable via `spark.graft.dedup.barrier`:
-    *
-    *  - `localCheckpoint` (default): eager, and the blocks live only as
-    *    long as the returned frame is REACHABLE — the ContextCleaner
-    *    unpersists them once the result is dropped, so repeated dedup
-    *    calls in a long-lived session don't accrete executor storage the
-    *    way never-unpersisted `persist()` pins do (r3 verdict). TRADE-OFF:
-    *    it truncates lineage onto non-replicated blocks, so on a real
-    *    cluster the loss of one executor mid-query fails the job instead
-    *    of recomputing — acceptable under local[*] and for restartable
-    *    batch jobs, not for long multi-hour pipelines.
-    *  - `checkpoint`: reliable checkpoint to `sc.setCheckpointDir` (HDFS/
-    *    object store) — survives executor loss; the right setting for the
-    *    1000-executor deployment, at the cost of a distributed write.
-    *  - `persist`: plain StorageLevel MEMORY_AND_DISK with lineage kept —
-    *    recomputable on block loss; storage is freed only when the
-    *    session drops the RDD, so callers own the lifetime.
-    */
-  private[graft] def barrier(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.dedup.barrier", "localCheckpoint") match {
-      case "checkpoint" => df.checkpoint()
-      case "persist" => df.persist()
-      case _ => df.localCheckpoint()
-    }
+  /** Materialization barrier for intermediates reused across join sides:
+    * an eager `localCheckpoint`, whose blocks live only as long as the
+    * returned frame is REACHABLE — the ContextCleaner unpersists them once
+    * the result is dropped, so repeated dedup calls in a long-lived
+    * session don't accrete executor storage the way never-unpersisted
+    * `persist()` pins do (r3 verdict). TRADE-OFF: it truncates lineage
+    * onto non-replicated blocks, so on a real cluster the loss of one
+    * executor mid-query fails the job instead of recomputing — acceptable
+    * under local[*] and for restartable batch jobs, not for long
+    * multi-hour pipelines. */
+  private[graft] def barrier(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** Exact dedup: group on md5 of the raw text. Returns one row per
     * distinct content hash with the surviving (min) id and the group size. */
@@ -159,7 +145,7 @@ object Dedup {
    * Returns (id_a, id_b, jaccard) with id_a < id_b.
    *
    * Scale shape: signatures and shingle sets are computed once per doc
-   * (persist barrier), the self-join shuffles only (band, bucket, id)
+   * (a barrier), the self-join shuffles only (band, bucket, id)
    * triples, and buckets with a single member never reach the join.
    */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
@@ -686,11 +672,8 @@ object Dedup {
       // the final star forest's blocks are OWNED — re-materialize the labels
       // onto barrier()-managed storage before freeing them, so reads of the
       // returned frame never fall back to re-running the whole round chain
-      // through RDD lineage (the count() forces the lazy `persist` barrier
-      // mode, the eager modes have already run)
-      val out = barrier(labels)
-      out.count()
-      out
+      // through RDD lineage
+      barrier(labels)
     } finally {
       freeHalf()
       freeE()

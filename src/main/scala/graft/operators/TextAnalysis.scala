@@ -449,11 +449,8 @@ object TextAnalysis {
    * pass and the reassembly join share that scan through a
    * [[Dedup.barrier]], so never shuffling corpus bytes is paid for in
    * storage: the barrier materializes the whole corpus's token arrays, at
-   * least the size of the text (token bytes plus per-token offsets).
-   * `spark.graft.dedup.barrier` governs where that copy lives while the
-   * operator runs: block-manager memory and local disk under the default
-   * `localCheckpoint`, cached blocks that keep their lineage under
-   * `persist`, checkpoint files under `checkpoint`.
+   * least the size of the text (token bytes plus per-token offsets),
+   * held in block-manager memory and local disk while the operator runs.
    *
    * @return (id, n_kept, text_dedup)
    */

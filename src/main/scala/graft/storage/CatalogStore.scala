@@ -141,8 +141,7 @@ object CatalogStore {
     val out = fs.create(tmp, false)
     try out.write((json + "\n").getBytes("UTF-8")) finally out.close()
     val fin = new Path(dir, f"entry-${e.revision}%019d-$id.json")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"rename $tmp -> $fin failed")
+    Commit.rename(fs, tmp, fin)
     // the new entry is durable and visible: retire everything else in the
     // dir (older entry files, orphaned temps, pre-round part-file layouts)
     fs.listStatus(dir).foreach { st =>
@@ -353,9 +352,7 @@ object CatalogStore {
     if (existed) {
       val t = new org.apache.hadoop.fs.Path(tombstonePath(root, group, name))
       fs.mkdirs(t.getParent)
-      val out = fs.create(t, true)
-      try out.write(s"$nowMs ${lastRev.getOrElse(0L)}".getBytes("UTF-8"))
-      finally out.close()
+      Commit.writeText(fs, t, s"$nowMs ${lastRev.getOrElse(0L)}")
     }
     existed
   }
@@ -375,13 +372,8 @@ object CatalogStore {
     val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(t)) None
     else {
-      val in = fs.open(t)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        val parts = new String(buf, 0, math.max(n, 0), "UTF-8").trim.split(" ")
-        Some((parts(0).toLong, if (parts.length > 1) parts(1).toLong else 0L))
-      } finally in.close()
+      val parts = Commit.readText(fs, t).trim.split(" ")
+      Some((parts(0).toLong, if (parts.length > 1) parts(1).toLong else 0L))
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.storage
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -19,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * (file set difference against the generation state) are read as one
  * small DataFrame, pushed through the SAME sampler transform the hot
  * path uses (e.g. [[graft.operators.TracePipeline.latencyStatusSample]]),
- * and swapped in via a staged-commit manifest — the exact crash-safety
- * discipline of [[Layout.compactSegments]]. The reference's single
+ * and swapped in via a staged-commit manifest — the same [[Commit]] as
+ * [[Layout.compactSegments]]. The reference's single
  * node-wide concurrency-1 scanner maps to the sweep being a maintenance
  * job, not a query-path operation.
  *
@@ -68,7 +69,19 @@ object Finalize {
   private val StagingName = ".finalize-staging"
 
   /** generation state: (gen, rounds, finalized file names). */
-  private final case class State(gen: Long, rounds: Int, files: Set[String])
+  private final case class State(gen: Long, rounds: Int, files: Set[String]) {
+    def content: String = (s"$gen" :: s"$rounds" :: files.toList.sorted).mkString("\n")
+  }
+
+  /** `dir`'s generation state; the empty state when it has none. */
+  private def readState(fs: FileSystem, dir: Path): State = {
+    val p = new Path(dir, StateName)
+    if (!fs.exists(p)) State(0L, 0, Set.empty)
+    else Commit.readText(fs, p).split('\n').toList match {
+      case g :: r :: rest => State(g.toLong, r.toInt, rest.filter(_.nonEmpty).toSet)
+      case _ => State(0L, 0, Set.empty)
+    }
+  }
 
   /**
    * Post-compaction state maintenance, called by
@@ -84,29 +97,17 @@ object Finalize {
    * reference's merges) — the state keeps its gen/rounds but drops the
    * now-deleted file names so they cannot accrete forever.
    *
-   * @return the escaped state content to write, or None when the
-   *         directory has no finalize state at all
+   * @return the state content to write, or None when the directory has
+   *         no finalize state at all
    */
-  private[storage] def compactedStateContent(
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
-      oldNames: Set[String], newNames: Seq[String]): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, StateName)
-    if (!fs.exists(p)) None
+  private[storage] def compactedStateContent(fs: FileSystem, dir: Path,
+      oldNames: Set[String], newNames: Seq[String]): Option[String] =
+    if (!fs.exists(new Path(dir, StateName))) None
     else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      s.split('\n').toList match {
-        case g :: r :: rest =>
-          val files = rest.filter(_.nonEmpty).toSet
-          val kept =
-            if (oldNames.subsetOf(files)) newNames.toList.sorted
-            else Nil
-          Some((g :: r :: kept).mkString("\\n"))
-        case _ => None
-      }
+      val st = readState(fs, dir)
+      val kept = if (oldNames.subsetOf(st.files)) newNames.toSet else Set.empty[String]
+      Some(st.copy(files = kept).content)
     }
-  }
 
   /**
    * Sweep every cooled (seg, shard) directory of the layout whose data
@@ -126,110 +127,41 @@ object Finalize {
       sampler: DataFrame => DataFrame, now: java.time.Instant,
       graceDays: Int = 1, maxRounds: Int = 8): Seq[Report] = {
     require(graceDays >= 0 && maxRounds >= 1, "graceDays/maxRounds must be sane")
-    import org.apache.hadoop.fs.Path
     val table = new Path(Layout.path(root, spec))
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(table)) return Nil
     // cooled = the segment's last covered epoch-day ended ≥ graceDays ago
     val horizonSeg = Layout.segFor(spec,
       now.minus(java.time.Duration.ofDays(graceDays.toLong)))
-
-    def dataFiles(dir: Path): Seq[Path] =
-      fs.listStatus(dir).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-        .map(_.getPath)
-
-    def readState(dir: Path): State = {
-      val p = new Path(dir, StateName)
-      if (!fs.exists(p)) State(0L, 0, Set.empty)
-      else {
-        val in = fs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        s.split('\n').toList match {
-          case g :: r :: rest =>
-            State(g.toLong, r.toInt, rest.filter(_.nonEmpty).toSet)
-          case _ => State(0L, 0, Set.empty)
-        }
-      }
-    }
-
-    def writeFile(p: Path, content: String): Unit = {
-      val out = fs.create(p, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-
-    /** replay a commit manifest: MOVE/DEL are existence-checked, STATE is
-      * a rewrite — idempotent, so a crashed apply completes exactly the
-      * committed round. */
-    def applyManifest(dir: Path): Unit = {
-      val m = new Path(dir, CommitName)
-      val in = fs.open(m)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      lines.foreach { line =>
-        line.split('\t') match {
-          case Array("MOVE", src, dst) =>
-            val s = new Path(src)
-            if (fs.exists(s)) { fs.rename(s, new Path(dst)); () }
-          case Array("DEL", p) =>
-            val f = new Path(p)
-            if (fs.exists(f)) { fs.delete(f, false); () }
-          case Array("STATE", content) =>
-            writeFile(new Path(dir, StateName), content.replace("\\n", "\n"))
-          case _ => ()
-        }
-      }
-      fs.delete(m, false)
-      ()
-    }
-
-    val dirs = for {
-      segSt <- fs.listStatus(table).toSeq
-      if segSt.isDirectory && segSt.getPath.getName.startsWith(s"${Layout.SegCol}=")
-      seg = segSt.getPath.getName.stripPrefix(s"${Layout.SegCol}=").toInt
-      // the segment covers [seg, seg + segmentDays) — cooled when the
-      // whole window is at or before the horizon
-      if seg + spec.segmentDays <= horizonSeg
-      shardSt <- fs.listStatus(segSt.getPath).toSeq
-      if shardSt.isDirectory && shardSt.getPath.getName.startsWith(s"${Layout.ShardCol}=")
-    } yield (seg,
-      shardSt.getPath.getName.stripPrefix(s"${Layout.ShardCol}=").toInt,
-      shardSt.getPath)
+    // the segment covers [seg, seg + segmentDays) — cooled when the
+    // whole window is at or before the horizon
+    val dirs = Layout.shardDirs(fs, table)
+      .filter { case (seg, _, _) => seg + spec.segmentDays <= horizonSeg }
 
     val reports = dirs.flatMap { case (seg, shard, dir) =>
       // finish a crashed earlier round before anything else
-      if (fs.exists(new Path(dir, CommitName))) applyManifest(dir)
+      val commit = new Path(dir, CommitName)
+      if (fs.exists(commit)) Commit.replay(fs, commit)
       val staging = new Path(dir, StagingName)
       if (fs.exists(staging)) fs.delete(staging, true)
-      val st = readState(dir)
-      val unfinalized = dataFiles(dir).filterNot(f => st.files(f.getName))
+      val st = readState(fs, dir)
+      val unfinalized = Layout.dataFiles(fs, dir).map(_.getPath)
+        .filterNot(f => st.files(f.getName))
       if (unfinalized.isEmpty || st.rounds >= maxRounds) None
       else {
         val rows = spark.read.parquet(unfinalized.map(_.toString): _*)
         val kept = sampler(rows)
         val rowsBefore = rows.count()
         kept.write.mode("overwrite").parquet(staging.toString)
-        val staged = dataFiles(staging)
+        val staged = Layout.dataFiles(fs, staging).map(_.getPath)
         val rowsAfter = spark.read.parquet(staging.toString).count()
         val newState = State(st.gen + 1, st.rounds + 1,
           st.files ++ staged.map(_.getName))
-        val stateContent =
-          (s"${newState.gen}" :: s"${newState.rounds}" ::
-            newState.files.toList.sorted).mkString("\n")
-        val manifest =
-          (staged.map(f => s"MOVE\t$f\t$dir/${f.getName}") ++
-            unfinalized.map(f => s"DEL\t$f") ++
-            Seq(s"STATE\t${stateContent.replace("\n", "\\n")}"))
-            .mkString("", "\n", "\n")
-        Failpoints.hit("finalize.staged")
-        val tmp = new Path(dir, s"$CommitName.tmp")
-        writeFile(tmp, manifest)
-        fs.rename(tmp, new Path(dir, CommitName))
-        Failpoints.hit("finalize.committed")
-        // the committed round is now durable — apply it
-        applyManifest(dir)
+        // durable before any live file is touched, then applied
+        Commit.commit(fs, commit,
+          staged.map(f => Commit.Move(f, new Path(dir, f.getName))) ++
+            unfinalized.map(Commit.Del) :+ Commit.State(dir, newState.content),
+          "finalize")
         fs.delete(staging, true)
         Some(Report(seg, shard, newState.gen, unfinalized.length,
           rowsBefore, rowsAfter))

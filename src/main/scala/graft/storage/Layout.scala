@@ -1,5 +1,6 @@
 package graft.storage
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
@@ -139,15 +140,54 @@ object Layout {
   def segExprFor(spec: LayoutSpec): Column = segOf(spec)
 
   /** Epoch-day segment bucket for a concrete instant. */
-  def segFor(spec: LayoutSpec, t: java.time.Instant): Int = {
+  def segFor(spec: LayoutSpec, t: java.time.Instant): Int = segFor(spec.segmentDays, t)
+
+  /** [[segFor]] for a bare segment interval, for callers with no spec. */
+  def segFor(segmentDays: Int, t: java.time.Instant): Int = {
     val days = Math.floorDiv(t.getEpochSecond, 86400L)
-    val aligned = days - Math.floorMod(days, spec.segmentDays.toLong)
+    val aligned = days - Math.floorMod(days, segmentDays.toLong)
     // saturate: an extreme query bound (Instant.MAX/MIN) must clamp to the
     // widest segment filter, not wrap Int and silently exclude segments
     if (aligned > Int.MaxValue) Int.MaxValue
     else if (aligned < Int.MinValue) Int.MinValue
     else aligned.toInt
   }
+
+  /** Epoch nanos of an instant, SATURATING: stored timestamps are int64
+    * nanos (the reference's representable span, ~1677..2262), and an
+    * instant outside it clamps to Long.MinValue/MaxValue instead of
+    * overflowing into a sign flip — the stream golden "invalid time range"
+    * case spans [minInt64 ns, maxInt64 ns] and must return everything. */
+  def epochNanos(t: java.time.Instant): Long =
+    try Math.addExact(Math.multiplyExact(t.getEpochSecond, 1000000000L), t.getNano.toLong)
+    catch { case _: ArithmeticException =>
+      if (t.getEpochSecond < 0) Long.MinValue else Long.MaxValue }
+
+  /** Every `seg=N` directory of a layout table as (seg, dir); none when
+    * the table does not exist. The one parser of the directory names. */
+  private[storage] def segDirs(fs: FileSystem, table: Path): Seq[(Int, Path)] =
+    if (!fs.exists(table)) Nil
+    else fs.listStatus(table).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith(s"$SegCol=") =>
+        (st.getPath.getName.stripPrefix(s"$SegCol=").toInt, st.getPath)
+    }
+
+  /** Every `seg=N/shard=M` directory of a layout table as (seg, shard, dir). */
+  private[storage] def shardDirs(fs: FileSystem, table: Path): Seq[(Int, Int, Path)] =
+    for {
+      (seg, segDir) <- segDirs(fs, table)
+      st <- fs.listStatus(segDir).toSeq
+      if st.isDirectory && st.getPath.getName.startsWith(s"$ShardCol=")
+    } yield (seg, st.getPath.getName.stripPrefix(s"$ShardCol=").toInt, st.getPath)
+
+  /** The data files of a directory: names starting `_` or `.` are
+    * metadata (`_SUCCESS`, checksums, manifests, state), as in Spark's
+    * own file listing. */
+  private[storage] def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { f =>
+      val name = f.getPath.getName
+      f.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
 
   /** Batch append (S7 write path): route every row to its (seg, shard)
     * directory. Rows with a null entity component are rejected, as the
@@ -205,7 +245,6 @@ object Layout {
    */
   def enforceTtl(spark: SparkSession, root: String, spec: LayoutSpec,
       olderThan: java.time.Instant): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
     val horizon = segFor(spec, olderThan)
     val table = new Path(path(root, spec))
     // Hadoop FileSystem, not java.io.File — retention must work against
@@ -213,14 +252,12 @@ object Layout {
     // segment drop is a prefix delete.
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(table)) return Nil
-    val expired = fs.listStatus(table)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$SegCol="))
-      .filter(_.getPath.getName.stripPrefix(s"$SegCol=").toInt < horizon)
-    expired.foreach(st => fs.delete(st.getPath, true))
+    val expired = segDirs(fs, table).filter(_._1 < horizon)
+    expired.foreach { case (_, dir) => fs.delete(dir, true) }
     // a session that already listed this table may hold deleted files in
     // its FileStatusCache — drop them so the next scan re-lists
     spark.catalog.refreshByPath(path(root, spec))
-    expired.map(_.getPath.getName.stripPrefix(s"$SegCol=").toInt).toSeq.sorted
+    expired.map(_._1).sorted
   }
 
   /**
@@ -240,8 +277,9 @@ object Layout {
    * old-file deletes before any live directory is touched. A crash before
    * the manifest exists leaves the old layout untouched (staging garbage
    * is swept on the next run); a crash after it is completed by the next
-   * run's recovery (moves are rename-idempotent, deletes are
-   * existence-checked) — exactly-once via the manifest, the same
+   * run's replay of the manifest ([[Commit]], shared with
+   * [[Finalize.finalizeSegments]]; a move that fails throws and keeps the
+   * manifest) — exactly-once via the manifest, the same
    * generation-stamp discipline as [[Stages]].migrate. Like the
    * reference's part merger this assumes one MAINTAINER per table (the
    * CatalogStore single-writer rule); a concurrent READER can transiently
@@ -256,59 +294,21 @@ object Layout {
   def compactSegments(spark: SparkSession, root: String, spec: LayoutSpec,
       targetBytes: Long = 128L << 20, maxFiles: Int = 1): Seq[(Int, Int, Int, Int)] = {
     require(targetBytes > 0 && maxFiles >= 1, "targetBytes/maxFiles must be positive")
-    import org.apache.hadoop.fs.Path
     val table = new Path(path(root, spec))
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(table)) return Nil
     val stagingRoot = new Path(table, ".compact-staging")
     val marker = new Path(table, ".compact-commit")
-
-    // complete a crashed commit: every MOVE/DEL in the manifest is
-    // idempotent (a staged file already moved is absent; an old file
-    // already deleted is absent), so replaying the whole manifest
-    // finishes exactly the interrupted compaction
-    def applyManifest(): Unit = {
-      val in = fs.open(marker)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      lines.foreach { line =>
-        line.split('\t') match {
-          case Array("MOVE", src, dst) =>
-            val s = new Path(src)
-            if (fs.exists(s)) { fs.rename(s, new Path(dst)); () }
-          case Array("DEL", p) =>
-            val f = new Path(p)
-            if (fs.exists(f)) { fs.delete(f, false); () }
-          case Array("FSTATE", d, content) =>
-            // finalize-state rewrite (see Finalize.compactedStateContent);
-            // a plain rewrite, idempotent under manifest replay
-            val out = fs.create(new Path(new Path(d), Finalize.StateName), true)
-            try out.write(content.replace("\\n", "\n").getBytes("UTF-8"))
-            finally out.close()
-          case _ => ()
-        }
-      }
-      fs.delete(marker, false)
-      ()
-    }
-    if (fs.exists(marker)) applyManifest()
+    // complete a crashed commit first (replay finishes exactly the
+    // interrupted compaction, or throws and keeps it), then sweep staging
+    if (fs.exists(marker)) Commit.replay(fs, marker)
     if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
 
-    val victims = for {
-      segSt <- fs.listStatus(table).toSeq
-      if segSt.isDirectory && segSt.getPath.getName.startsWith(s"$SegCol=")
-      shardSt <- fs.listStatus(segSt.getPath).toSeq
-      if shardSt.isDirectory && shardSt.getPath.getName.startsWith(s"$ShardCol=")
-      files = fs.listStatus(shardSt.getPath)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-      if files.length > maxFiles
-    } yield {
-      val seg = segSt.getPath.getName.stripPrefix(s"$SegCol=").toInt
-      val shard = shardSt.getPath.getName.stripPrefix(s"$ShardCol=").toInt
+    val victims = shardDirs(fs, table).flatMap { case (seg, shard, dir) =>
+      val files = dataFiles(fs, dir)
       val bytes = files.map(_.getLen).sum
       val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      (seg, shard, shardSt.getPath.toString, files.length, n)
+      if (files.length > maxFiles) Some((seg, shard, dir, files.length, n)) else None
     }
     if (victims.isEmpty) return Nil
     // one job rewrites all victim directories: read ONLY those directories
@@ -322,7 +322,7 @@ object Layout {
       .toDF(SegCol, ShardCol, "__nbins")
     spark.read
       .option("basePath", path(root, spec))
-      .parquet(victims.map(_._3): _*)
+      .parquet(victims.map(_._3.toString): _*)
       .join(broadcast(bins), Seq(SegCol, ShardCol))
       .withColumn("__bin",
         pmod(xxhash64(spec.entity.map(col): _*), col("__nbins").cast("long")))
@@ -331,44 +331,25 @@ object Layout {
       .write.mode("overwrite")
       .partitionBy(SegCol, ShardCol)
       .parquet(stagingRoot.toString)
-    // manifest = the full commit, written atomically (tmp + rename) BEFORE
-    // any live-tree mutation: move every staged data file into its live
-    // directory (job-unique part names cannot clash with live files),
-    // then delete the superseded old files
-    def dataFiles(dir: Path): Seq[Path] =
-      fs.listStatus(dir).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
+    // the commit: move every staged data file into its live directory
+    // (job-unique part names cannot clash with live files), then delete
+    // the superseded old files
+    val steps = victims.flatMap { case (seg, shard, live, _, _) =>
+      val staged = dataFiles(fs, new Path(stagingRoot, s"$SegCol=$seg/$ShardCol=$shard"))
         .map(_.getPath)
-    val manifest = new StringBuilder
-    victims.foreach { case (seg, shard, live, _, _) =>
-      val staged = new Path(stagingRoot, s"$SegCol=$seg/$ShardCol=$shard")
-      val stagedFiles = dataFiles(staged)
-      val oldFiles = dataFiles(new Path(live))
-      stagedFiles.foreach(f =>
-        manifest.append(s"MOVE\t$f\t$live/${f.getName}\n"))
-      oldFiles.foreach(f =>
-        manifest.append(s"DEL\t$f\n"))
+      val old = dataFiles(fs, live).map(_.getPath)
       // fully-finalized directories stay finalized across the rewrite
       // (mixed ones re-enter the sweep); committed with the same manifest
-      Finalize.compactedStateContent(fs, new Path(live),
-          oldFiles.map(_.getName).toSet, stagedFiles.map(_.getName))
-        .foreach(c => manifest.append(s"FSTATE\t$live\t$c\n"))
+      staged.map(f => Commit.Move(f, new Path(live, f.getName))) ++
+        old.map(Commit.Del) ++
+        Finalize.compactedStateContent(fs, live, old.map(_.getName).toSet, staged.map(_.getName))
+          .map(Commit.State(live, _))
     }
-    Failpoints.hit("compact.staged")
-    val markerTmp = new Path(table, ".compact-commit.tmp")
-    val out = fs.create(markerTmp, true)
-    try out.write(manifest.toString.getBytes("UTF-8")) finally out.close()
-    fs.rename(markerTmp, marker)
-    Failpoints.hit("compact.committed")
-    applyManifest()
+    Commit.commit(fs, marker, steps, "compact")
     fs.delete(stagingRoot, true)
     spark.catalog.refreshByPath(path(root, spec))
-    victims.map { case (seg, shard, p, before, _) =>
-      val after = fs.listStatus(new Path(p))
-        .count(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-      (seg, shard, before, after)
+    victims.map { case (seg, shard, dir, before, _) =>
+      (seg, shard, before, dataFiles(fs, dir).length)
     }.sortBy(v => (v._1, v._2))
   }
 
@@ -412,16 +393,9 @@ object Layout {
     timeRange.foreach { case (b, e) =>
       df = df.filter(col(SegCol) >= lit(segFor(spec, b)) &&
         col(SegCol) <= lit(segFor(spec, e)))
-      df = if (spec.tsIsNanos) {
-        // saturating, like Planners: instants outside the int64-ns span
-        // clamp instead of overflowing into a sign flip
-        def ns(i: java.time.Instant): Long =
-          try Math.addExact(
-            Math.multiplyExact(i.getEpochSecond, 1000000000L), i.getNano.toLong)
-          catch { case _: ArithmeticException =>
-            if (i.getEpochSecond < 0) Long.MinValue else Long.MaxValue }
-        df.filter(col(spec.tsCol) >= lit(ns(b)) && col(spec.tsCol) < lit(ns(e)))
-      } else df.filter(col(spec.tsCol) >= lit(java.sql.Timestamp.from(b)) &&
+      df = if (spec.tsIsNanos)
+        df.filter(col(spec.tsCol) >= lit(epochNanos(b)) && col(spec.tsCol) < lit(epochNanos(e)))
+      else df.filter(col(spec.tsCol) >= lit(java.sql.Timestamp.from(b)) &&
         col(spec.tsCol) < lit(java.sql.Timestamp.from(e)))
     }
     df

@@ -57,10 +57,8 @@ object Stages {
   private def writeMarker(spark: SparkSession, root: String, spec: LayoutSpec,
       m: Migration): Unit = {
     val p = markerPath(root, spec)
-    val out = fs(spark, p).create(p, true)
-    try out.write(
-      s"${m.state}\n${m.from}\n${m.to}\n${m.segs.mkString(",")}\n".getBytes("UTF-8"))
-    finally out.close()
+    Commit.writeText(fs(spark, p), p,
+      s"${m.state}\n${m.from}\n${m.to}\n${m.segs.mkString(",")}\n")
   }
 
   private[storage] def readMarker(spark: SparkSession, root: String,
@@ -68,9 +66,7 @@ object Stages {
     val p = markerPath(root, spec)
     val f = fs(spark, p)
     if (!f.exists(p)) return None
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = text.split("\n")
+    val lines = Commit.readText(f, p).split("\n")
     Some(Migration(lines(0), lines(1), lines(2),
       lines.lift(3).filter(_.nonEmpty).toSeq.flatMap(_.split(",")).map(_.trim.toInt)))
   }
@@ -145,13 +141,8 @@ object Stages {
       reportDir: Option[String] = None): Seq[Int] = {
     val horizon = Layout.segFor(spec, olderThan)
     val srcTable = new Path(Layout.path(sr.root(from), spec))
-    val f = fs(spark, srcTable)
-    val segs: Seq[Int] =
-      if (!f.exists(srcTable)) Nil
-      else f.listStatus(srcTable).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"${Layout.SegCol}="))
-        .map(_.getPath.getName.stripPrefix(s"${Layout.SegCol}=").toInt)
-        .filter(_ < horizon).sorted
+    val segs = Layout.segDirs(fs(spark, srcTable), srcTable).map(_._1)
+      .filter(_ < horizon).sorted
     if (segs.isEmpty) {
       // resume tail of a crashed run: source already emptied, marker left
       readMarker(spark, sr.root(to), spec) match {
@@ -213,8 +204,7 @@ object Stages {
       s"$rd/migration-${spec.group}__${spec.name}-h$horizon.json")
     val f = fs(spark, p)
     f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    Commit.writeText(f, p, body)
   }
 
   /**
@@ -243,18 +233,14 @@ object Stages {
     val groupDir = new Path(s"$sourceRoot/$group")
     val f = fs(spark, groupDir)
     if (!f.exists(groupDir)) return Nil
-    val days = Math.floorDiv(olderThan.getEpochSecond, 86400L)
-    val horizon = (days - Math.floorMod(days, segmentDays.toLong)).toInt
+    val horizon = Layout.segFor(segmentDays, olderThan)
     val orphans = f.listStatus(groupDir).toSeq
       .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_"))
       .map(_.getPath)
       .filterNot(p => registered.contains(p.getName))
     val archived = orphans.map { table =>
       val name = table.getName
-      val expired = f.listStatus(table).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"${Layout.SegCol}="))
-        .map(_.getPath)
-        .filter(_.getName.stripPrefix(s"${Layout.SegCol}=").toInt < horizon)
+      val expired = Layout.segDirs(f, table).filter(_._1 < horizon)
       if (expired.isEmpty) name -> 0L
       else {
         // horizon-scoped output dir: a LATER run (new horizon, new expired
@@ -276,9 +262,7 @@ object Stages {
               .select(Layout.SegCol).distinct().collect()
               .map(_.get(0).toString.toDouble.toInt).toSet
           else Set.empty
-        val toArchive = expired
-          .map(_.getName.stripPrefix(s"${Layout.SegCol}=").toInt)
-          .filterNot(covered.contains)
+        val toArchive = expired.map(_._1).filterNot(covered.contains)
         if (toArchive.nonEmpty) {
           val attempt = new Path(s"$out.tmp")
           f.delete(attempt, true)
@@ -287,12 +271,14 @@ object Stages {
             .write.mode("overwrite").option("compression", "gzip")
             .json(attempt.toString)
           f.mkdirs(outPath.getParent)
-          if (!f.exists(outPath)) f.rename(attempt, outPath)
-          else f.rename(attempt, new Path(outPath, s"run-${System.nanoTime()}"))
+          // a publish that fails throws here, before any source delete
+          Commit.rename(f, attempt,
+            if (!f.exists(outPath)) outPath
+            else new Path(outPath, s"run-${System.nanoTime()}"))
         }
         val rows =
           spark.read.option("recursiveFileLookup", "true").json(out).count()
-        expired.foreach(p => f.delete(p, true))
+        expired.foreach { case (_, dir) => f.delete(dir, true) }
         spark.catalog.refreshByPath(table.toString)
         name -> rows
       }
@@ -305,8 +291,7 @@ object Stages {
         s"""{"measure":"$n","rows":$r}""" }.mkString(",")
       val body =
         s"""{"measures":[$entries],"total_rows":${archived.map(_._2).sum}}"""
-      val out = fs(spark, mPath).create(mPath, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
+      Commit.writeText(fs(spark, mPath), mPath, body)
     }
     archived
   }

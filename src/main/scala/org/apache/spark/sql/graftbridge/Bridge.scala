@@ -59,41 +59,21 @@ object Bridge {
    * MEASURED storage bytes of a materialized frame — the sum of the
    * mem+disk block sizes of the persisted RDDs backing its leaf scans
    * (localCheckpoint / materializeOwned both leave a LogicalRDD whose
-   * RDD is registered with the block manager), plus, for RELIABLY
-   * checkpointed leaves (`spark.graft.dedup.barrier=checkpoint` — the
-   * documented setting for the 1000-executor deployment), the on-disk
-   * size of the checkpoint files: a reliable checkpoint holds no
-   * block-manager storage at all, so without this branch the config
-   * meant for the LARGEST scale would silently lose size-derived
-   * shuffle sizing. None only when no persisted or checkpointed leaf
-   * backs the frame (the `persist`-mode barrier, which keeps the
-   * original plan) — callers fall back to a static partition count.
+   * RDD is registered with the block manager). None when no persisted
+   * leaf backs the frame — callers fall back to a static partition count.
    *
    * This is the honest input to SIZE-DERIVED shuffle sizing: logical
    * plan statistics for a lineage-cut leaf are just defaults, while the
-   * block manager (or the checkpoint filesystem) reports what the data
-   * actually occupies.
+   * block manager reports what the data actually occupies.
    */
   def materializedBytes(df: org.apache.spark.sql.DataFrame): Option[Long] = {
     val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val sc = classic.sparkSession.sparkContext
-    val rdds = classic.queryExecution.analyzed.collectLeaves().collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    val ids = rdds.map(_.id).toSet
-    val infos = sc.getRDDStorageInfo.filter(i => ids.contains(i.id))
-    val storedIds = infos.map(_.id).toSet
-    val blockBytes = infos.map(i => i.memSize + i.diskSize).sum
-    // leaves with no block-manager presence: reliably-checkpointed RDDs
-    // report their bytes from the checkpoint files instead
-    val ckptBytes = rdds.filterNot(r => storedIds.contains(r.id))
-      .flatMap(_.getCheckpointFile).map { dir =>
-        try {
-          val path = new org.apache.hadoop.fs.Path(dir)
-          path.getFileSystem(sc.hadoopConfiguration).getContentSummary(path).getLength
-        } catch { case scala.util.control.NonFatal(_) => 0L }
-      }.sum
-    val total = blockBytes + ckptBytes
+    val ids = classic.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    val total = sc.getRDDStorageInfo.filter(i => ids.contains(i.id))
+      .map(i => i.memSize + i.diskSize).sum
     if (total > 0) Some(total) else None
   }
 }

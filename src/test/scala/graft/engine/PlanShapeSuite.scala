@@ -118,60 +118,35 @@ class PlanShapeSuite extends SparkSpec {
     assert(n == 0, s"$n persistent RDDs still pinned after GC")
   }
 
-  test("dedup barrier modes: reliable checkpoint and persist agree with default") {
-    // cluster deployments trade localCheckpoint's cleanup for fault
-    // tolerance (reliable checkpoint keeps the job recoverable on executor
-    // loss; persist keeps lineage) — all three modes must be equivalent
-    import graft.operators.Dedup
-    import graft.sources.Catalog
-    val docs = Catalog.load(spark, sf0001, "documents").limit(200)
-    def run() = Dedup.minhashLshPairs(docs, "doc_id", "text", w = 3,
-      bands = 8, rowsPerBand = 2, threshold = 0.5)
-      .collect().map(_.toSeq).toSet
-    val base = run()
-    val ckptDir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckptDir)
-    try {
-      spark.conf.set("spark.graft.dedup.barrier", "checkpoint")
-      assert(run() == base, "reliable checkpoint diverged")
-      spark.conf.set("spark.graft.dedup.barrier", "persist")
-      assert(run() == base, "persist diverged")
-    } finally spark.conf.unset("spark.graft.dedup.barrier")
-  }
-
   test("dedup broadcast gate fails closed when the postings cannot be measured") {
-    // barrier mode `persist` keeps the original plan, so no materialized
-    // leaf reports bytes: the per-document table must not be hinted, or
-    // a corpus-sized side is broadcast exactly where its size is unknown
+    // an un-barriered frame has no materialized leaf, so nothing reports
+    // its bytes: the per-document table must not be hinted, or a
+    // corpus-sized side is broadcast exactly where its size is unknown
     import graft.operators.Dedup
     import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, ResolvedHint}
-    def gated(barrier: String,
+    def gated(barriered: Boolean,
         maxBytes: Option[Long] => Long = _ => Dedup.BroadcastGateBytes) = {
-      spark.conf.set("spark.graft.dedup.barrier", barrier)
-      try {
-        val postings = Dedup.barrier(spark.range(1000).toDF("id"))
-        postings.count()
-        val bytes = org.apache.spark.sql.graftbridge.Bridge.materializedBytes(postings)
-        val dim = spark.range(100).toDF("id")
-        val joined = postings.join(
-          Dedup.broadcastIfBounded(dim, postings, maxBytes(bytes)), "id")
-        val out = (bytes,
-          joined.queryExecution.analyzed.collect { case h: ResolvedHint => h },
-          joined.queryExecution.optimizedPlan.collect { case j: Join => j.hint })
-        postings.unpersist()
-        out
-      } finally spark.conf.unset("spark.graft.dedup.barrier")
+      val range = spark.range(1000).toDF("id")
+      val postings = if (barriered) Dedup.barrier(range) else range
+      val bytes = org.apache.spark.sql.graftbridge.Bridge.materializedBytes(postings)
+      val dim = spark.range(100).toDF("id")
+      val joined = postings.join(
+        Dedup.broadcastIfBounded(dim, postings, maxBytes(bytes)), "id")
+      val out = (bytes,
+        joined.queryExecution.analyzed.collect { case h: ResolvedHint => h },
+        joined.queryExecution.optimizedPlan.collect { case j: Join => j.hint })
+      postings.unpersist()
+      out
     }
-    val (bytes, hints, joinHints) = gated("persist")
-    assert(bytes.isEmpty, s"persist barrier measured $bytes bytes")
+    val (bytes, hints, joinHints) = gated(barriered = false)
+    assert(bytes.isEmpty, s"an un-barriered frame measured $bytes bytes")
     assert(hints.isEmpty, s"broadcast hint under an unmeasurable gate: $hints")
     assert(joinHints == Seq(JoinHint.NONE), joinHints.toString)
     // the control: a measured barrier keeps the hint
-    val (measured, kept, _) = gated("localCheckpoint")
+    val (measured, kept, _) = gated(barriered = true)
     assert(measured.exists(_ > 0) && kept.nonEmpty, s"$measured, $kept")
     // measured, but one byte over the gate: a plain join again
-    val (over, overHints, overJoinHints) = gated("localCheckpoint", _.get - 1)
+    val (over, overHints, overJoinHints) = gated(barriered = true, _.get - 1)
     assert(over.exists(_ > 0), s"$over")
     assert(overHints.isEmpty, s"broadcast hint above the gate: $overHints")
     assert(overJoinHints == Seq(JoinHint.NONE), overJoinHints.toString)

@@ -314,4 +314,45 @@ class LayoutSuite extends SparkSpec {
       .orderBy("event_id", "ts_ns").collect().toSeq
     assert(rowsAfter == rowsBefore, "recovery lost or duplicated rows")
   }
+
+  test("compaction recovery: a manifest MOVE that fails keeps every old file and the manifest") {
+    val root = tmp("compact_move_fail")
+    val slice = events.limit(400)
+    (0 until 2).foreach { i =>
+      Layout.append(slice.filter(col("event_id") % 2 === i), root, spec)
+    }
+    val rowsBefore = Layout.read(spark, root, spec)
+      .orderBy("event_id", "ts_ns").collect().toSeq
+    val table = new java.io.File(Layout.path(root, spec))
+    def dataFiles(dir: java.io.File) = dir.listFiles().filter(f => f.isFile &&
+      !f.getName.startsWith("_") && !f.getName.startsWith(".")).toSeq
+    val victim = (for {
+      seg <- table.listFiles().toSeq if seg.getName.startsWith("seg=")
+      sh <- seg.listFiles().toSeq if sh.getName.startsWith("shard=")
+      if dataFiles(sh).length > 1
+    } yield sh).head
+    val old = dataFiles(victim)
+    // a pending commit whose MOVE lands on a live file that already
+    // exists: Hadoop's rename returns false there instead of throwing, so
+    // a replay that ignored the result would go on to DELETE every old
+    // file — the only copies of the victim's rows
+    val rel = s"${victim.getParentFile.getName}/${victim.getName}"
+    val staged = new java.io.File(table, s".compact-staging/$rel")
+    staged.mkdirs()
+    val stagedPart = new java.io.File(staged, "part-staged.parquet")
+    Files.copy(old.head.toPath, stagedPart.toPath)
+    val manifest = (s"MOVE\t$stagedPart\t$victim/${old.head.getName}" +:
+      old.map(f => s"DEL\t$f")).mkString("", "\n", "\n")
+    val marker = new java.io.File(table, ".compact-commit")
+    Files.write(marker.toPath, manifest.getBytes("UTF-8"))
+    val err = intercept[java.io.IOException](Layout.compactSegments(spark, root, spec))
+    assert(err.getMessage.contains(old.head.getName), err.getMessage)
+    assert(old.forall(_.exists()), "a failed MOVE was followed by its DELs")
+    assert(marker.exists(), "the manifest of a failed replay must be kept")
+    assert(stagedPart.exists(), "the staged copy was swept")
+    spark.catalog.refreshByPath(Layout.path(root, spec))
+    val rowsAfter = Layout.read(spark, root, spec)
+      .orderBy("event_id", "ts_ns").collect().toSeq
+    assert(rowsAfter == rowsBefore, "a failed replay lost rows")
+  }
 }

@@ -30,7 +30,7 @@ calibrate() {  # $1 = tag
 # embed — BPE merges, recall shortlists — materialize if missing)
 for sf in sf01:/root/testdata/sf0.1 sf1:/root/repo/target/scale-sf1 sf5:/root/repo/target/scale-sf5; do
   name=${sf%%:*}; dir=${sf#*:}
-  SPARK_GRAFT_VERIFY_ONLY=__none__ \
+  SPARK_GRAFT_VERIFY_ONLY= \
     sbt -batch "runMain graft.Verify $dir $T/oracle_$name" >/dev/null 2>&1
   echo "ORACLE DUMP $name done"
 done
